@@ -41,14 +41,20 @@ SEVERITY = [
 ]
 
 
-def build_stream(spark: SparkSession, log_path: str) -> DataFrame:
+def build_stream(
+    spark: SparkSession, log_path: str, max_lines_per_batch: int | None = None
+) -> DataFrame:
+    """max_lines_per_batch: the replay source's per-microbatch cap
+    (its own default when None)."""
     register_replay_source(spark)
-    raw = (
+    reader = (
         spark.readStream.format("kawa_replay")
         .option("path", log_path)
         .option("topic", "applog")
-        .load()
     )
+    if max_lines_per_batch is not None:
+        reader = reader.option("maxLinesPerBatch", str(max_lines_per_batch))
+    raw = reader.load()
     env = normalize(raw, value="value", key="key", topic="applog")
     parsed = env.withColumn("payload", F.from_json("value", PAYLOAD_SCHEMA))
     sev = F.create_map(

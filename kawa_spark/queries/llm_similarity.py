@@ -554,6 +554,14 @@ def _lsh_sig_bits(dots: "np.ndarray") -> "np.ndarray":
     return sig
 
 
+def _nan_first_desc_order(scores: "np.ndarray", ids: "np.ndarray", k: int):
+    """Indices of the top ``k`` rows under the window's total order:
+    score desc with NaN first (Spark sorts NaN above every number,
+    +inf included), then id asc. NaN-ness is the primary lexsort key,
+    so a NaN score never ties with +inf."""
+    return np.lexsort((ids, -scores, ~np.isnan(scores)))[:k]
+
+
 def _multiprobe_frame(
     spark: SparkSession, sf_dir: str, radius: int = 1
 ) -> DataFrame:
@@ -649,12 +657,7 @@ def _multiprobe_frame(
                         _seq_fold_dots(em[mask], qm[qi : qi + 1])[:, 0]
                         / denom
                     )
-                # local top-k under the window's total order: score
-                # desc with NaN FIRST (Spark sorts NaN above every
-                # number), n_id asc — np.lexsort would put -NaN last,
-                # so NaN keys map to -inf explicitly
-                key = np.where(np.isnan(sscore), -np.inf, -sscore)
-                order = np.lexsort((sids, key))[:TOP_K]
+                order = _nan_first_desc_order(sscore, sids, TOP_K)
                 out_q.extend([qid] * len(order))
                 out_n.extend(sids[order])
                 out_s.extend(sscore[order])

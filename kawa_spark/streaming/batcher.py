@@ -59,6 +59,15 @@ class BatcherPolicy:
     # test/observability hook: called on each flush attempt error
     on_error: Callable[[Exception, int], None] | None = None
 
+    def __post_init__(self) -> None:
+        # a DLQ verdict with nowhere to write would drop the batch
+        # silently; that is DISCARD, so say which one is meant
+        if self.error_policy is ErrorPolicy.DLQ and not self.dlq_path:
+            raise ValueError(
+                "ErrorPolicy.DLQ needs a dlq_path; use ErrorPolicy.DISCARD "
+                "to drop failed batches"
+            )
+
 
 class DontAckError(RuntimeError):
     """Raised to abort the microbatch commit so the source redelivers."""
@@ -86,10 +95,9 @@ def make_foreach_batch(
                 if policy.error_policy is ErrorPolicy.DISCARD:
                     return  # commit batch, drop data (kawa Discard)
                 if policy.error_policy is ErrorPolicy.DLQ:
-                    if policy.dlq_path:
-                        batch_df.write.mode("append").format("json").save(
-                            f"{policy.dlq_path}/batch_id={batch_id}"
-                        )
+                    batch_df.write.mode("append").format("json").save(
+                        f"{policy.dlq_path}/batch_id={batch_id}"
+                    )
                     return
                 if policy.error_policy is ErrorPolicy.DONT_ACK:
                     raise DontAckError(

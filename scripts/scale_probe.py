@@ -126,31 +126,6 @@ def build(spark, k: int) -> None:
     )
 
 
-# Banked cores (built + oracle-verified but not yet registered — the
-# window-rotation queue): probe-able by name so their SCALE.md rows
-# exist BEFORE the registration round.
-BANKED = {
-    "multimodal_image_dedup_near":
-        ("kawa_spark.queries.llm_multimodal", "multimodal_image_dedup_near"),
-    "dedup_incremental_image":
-        ("kawa_spark.queries.llm_multimodal", "dedup_incremental_image"),
-    "embedding_pq_codes":
-        ("kawa_spark.queries.llm_similarity", "embedding_pq_codes"),
-    "stream_exec_dedup_incremental_image":
-        ("kawa_spark.queries.streaming_mode",
-         "stream_exec_dedup_incremental_image"),
-}
-
-
-def _resolve(key: str):
-    if key in registry.QUERIES:
-        return registry.QUERIES[key]
-    import importlib
-
-    mod, fn = BANKED[key]
-    return getattr(importlib.import_module(mod), fn)
-
-
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     probes = sys.argv[2:] or PROBES
@@ -183,7 +158,7 @@ def main() -> None:
 
     print(f"{'query':34s} {'sf0.1':>8s} {f'{k}x':>8s} {'ratio':>6s}")
     for key in probes:
-        fn = _resolve(key)
+        fn = registry.QUERIES[key]
         try:
             t1 = best_of(fn, SRC)
             t2 = best_of(fn, DST)

@@ -106,6 +106,15 @@ def test_dlq_policy_dead_letters(spark, tmp_path):
     assert dead.count() == 5
 
 
+def test_dlq_policy_without_path_is_rejected():
+    """A DLQ verdict with no dlq_path used to discard the failed batch
+    silently; it is now a construction error."""
+    with pytest.raises(ValueError, match="dlq_path"):
+        BatcherPolicy(error_policy=ErrorPolicy.DLQ)
+    with pytest.raises(ValueError, match="dlq_path"):
+        BatcherPolicy(error_policy=ErrorPolicy.DLQ, dlq_path="")
+
+
 def test_stream_failed_batch_not_committed(spark, tmp_path):
     """The ack contract end-to-end: a stream whose flush always fails
     (RAISE) commits nothing; a restarted stream with a working flush

@@ -50,6 +50,21 @@ def test_lsh_sig_bits_nan_counts_as_greater():
     assert S._lsh_sig_bits(dots).tolist() == [0b1001]
 
 
+def test_topk_order_nan_before_inf_matches_spark(spark):
+    """The batch-local top-k must replay the window's order: NaN above
+    +inf (they used to tie, NaN being mapped to -inf), then score desc,
+    then n_id asc."""
+    scores = np.array([np.inf, np.nan, 1.0, np.nan, np.inf, -np.inf, 2.0])
+    ids = np.array([1, 9, 3, 2, 5, 6, 7])
+    got = ids[S._nan_first_desc_order(scores, ids, len(ids))].tolist()
+    df = spark.createDataFrame(
+        [(int(i), float(x)) for i, x in zip(ids, scores)], "n_id long, score double"
+    )
+    want = [r.n_id for r in df.orderBy(df.score.desc(), "n_id").collect()]
+    assert got == want == [2, 9, 1, 5, 7, 3, 6]
+    assert ids[S._nan_first_desc_order(scores, ids, 3)].tolist() == [2, 9, 1]
+
+
 def test_seq_fold_matches_cumsum():
     """The per-dim panel accumulation must reproduce the r15 cumsum
     folds bit-for-bit (same add order) — including subnormal and
