@@ -972,10 +972,12 @@ def _simhash_bitsums_precount(d: DataFrame) -> DataFrame:
     md5 each DISTINCT pair once, then the same 64 flat codegen SUMs
     weighted by cnt — s_b = Σ_pairs bit_b·cnt and n_occ = Σ cnt are
     the exact integers of the occurrence form (Σ_occ bit_b grouped
-    by term), and the DuckDB oracle's own distinct-term shape. Costs
-    one extra exchange on (doc_id, term); the md5-per-occurrence
-    saving beats it 1.25× at the 100× probe (10.60 → 8.49 s,
-    min-of-2, integer-identical by exceptAll at that build)."""
+    by term), and the DuckDB oracle's own distinct-term shape. It
+    adds aggregates but no exchange (the committed plan reads
+    HashAggregate 12 → 20, Exchange 12 → 12: the pre-count reuses the
+    doc_id clustering); the md5-per-occurrence saving wins 1.25× at
+    the 100× probe (10.60 → 8.49 s, min-of-2, integer-identical by
+    exceptAll at that build)."""
     pairs = _simhash_occ_terms(d).groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -1092,7 +1094,8 @@ def _simhash_pairs_from_bitsums(
 ) -> DataFrame:
     """Simhash assembly + banding + cap + self-join + hamming verify
     over a per-doc (s0..s63, n_occ) bit-sum table — shared by the
-    registered occurrence form and the dictionary A/B variant."""
+    registered precount stage (_simhash_bitsums_precount) and the
+    retained occurrence and dictionary witnesses."""
     bit_weight = [F.lit(1 << b).cast("long") for b in range(63)] + [
         F.lit(-(1 << 63)).cast("long")  # sign bit: avoid long overflow
     ]

@@ -2,23 +2,153 @@
 runtime (not batch twins): bounded drain via trigger(availableNow) to
 a memory sink, result returned as a DataFrame.
 
-Rows-only checks (no oracle): the semantics are covered by their
-batch twins' oracles; what these verify is the streaming execution
-path itself — state store, watermarks, microbatch commit.
+Every twin is written against the same few helpers, called directly:
+``_drain`` (memory sink) / ``_drain_files`` (parquet sink) for the
+bounded drain, both waiting through ``_await``; ``_plant_stream`` for
+planted rows riding the stream as a second file source; ``_late0``
+for an oracle that pins the kernel's late-row counter to 0. Oracles
+are the batch keys' shared SQL constants, imported here verbatim.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from kawa_spark.envelope import normalize
+from kawa_spark.functions.exact import floordiv
 from kawa_spark.io import stream_table, table
-from kawa_spark.queries.events import RATE_LIMIT, RATE_WINDOW_US
+from kawa_spark.queries.events import (
+    ANOMALY_MAD_SQL,
+    DAY_US,
+    DOW_ASSOC_SQL,
+    DOW_DRIFT_SQL,
+    FUNNEL_SQL,
+    HOUR_US,
+    RATE_LIMIT,
+    RATE_WINDOW_US,
+    WEEK_US,
+    _dow_drift_planted,
+    _dow_planted,
+    _mad_planted,
+    dow_association,
+    dow_drift_report,
+    mad_scores,
+)
+from kawa_spark.queries.llm_dedup import (
+    INC_MH_PLANTS_NEW,
+    INC_MH_PLANTS_PRIOR,
+    INC_PLANTS_NEW,
+    INC_PLANTS_PRIOR,
+    INCREMENTAL_DEDUP_SQL,
+    _inc_minhash_oracle,
+    _norm_digest,
+    classify_incremental,
+    incremental_minhash_from_sigs,
+    is_prior_doc,
+    minhash_signatures,
+    prior_digest_index,
+    snapshot_split,
+)
+from kawa_spark.queries.llm_multimodal import (
+    _dhash_int,
+    _dhash_plant_texts,
+    _inc_image_plants,
+    _inc_image_sql,
+    image_dedup_from_hashes,
+    image_hashes,
+    incremental_image_from_hashes,
+)
+from kawa_spark.queries.llm_similarity import (
+    EMB_INC_PLANT_N,
+    _inc_embedding_oracle,
+    embedding_sigs,
+    incremental_embedding_from_sigs,
+)
+from kawa_spark.queries.logs import (
+    TEMPLATE_DRIFT_SQL,
+    daily_template_counts,
+    drift_report,
+    mask_template,
+    raw_msg_col,
+)
+from kawa_spark.queries.security import (
+    BEACON_CV2_DEN,
+    BEACON_CV2_NUM,
+    BEACON_MIN_GAPS,
+    CHAIN3_WINDOW_US,
+    CHAIN_WINDOW_US,
+    DGA_SCORE_SQL,
+    DGA_VOCAB,
+    FIRST_SEEN_SQL,
+    HOP_WINDOW_US,
+    IMPOSSIBLE_TRAVEL_SQL,
+    LATERAL_3HOP_SQL,
+    LATERAL_MOVEMENT_SQL,
+    PASSWORD_SPRAY_SQL,
+    PLANTS_SQL,
+    SESSION_GAP_US,
+    SESSION_RARITY_SQL,
+    SPRAY_MIN_USERS,
+    TYPOSQUAT_MAX_DIST,
+    TYPOSQUAT_SQL,
+    _lm3_plant_rows,
+    _lm_plant_rows,
+    _planted_beacons,
+    _planted_spray,
+    _typo_plant_rows,
+    dga_features,
+    domain_col,
+    first_seen_curve,
+    ip_col,
+    longest_prefix_match,
+    nets_df,
+    score_transitions,
+    typosquat_matches,
+)
+from kawa_spark.queries.stats import (
+    KMV_DISTINCT_SQL,
+    KMV_K,
+    QSK_K,
+    QUANTILE_SKETCH_SQL,
+    _kmv_u,
+    kmv_scores,
+    quantile_sketch_scores,
+)
 from kawa_spark.registry import register
-from kawa_spark.streaming.stateful import running_total, session_totals
+from kawa_spark.session import scoped_conf
+from kawa_spark.sources.file import RateSource
+from kawa_spark.streaming.rollup import read_rollup, start_incremental_rollup
+from kawa_spark.streaming.stateful import (
+    beacon_scores,
+    bottom_k_sample,
+    funnel_states,
+    net_hop_chains,
+    net_hop_chains3,
+    net_hops,
+    rate_limited,
+    running_total,
+    session_totals,
+    session_transitions,
+)
+
+def _await(q: StreamingQuery, what: str) -> None:
+    """Wait for a bounded query, failing loudly on expiry.
+
+    awaitTermination(timeout) returns False on expiry WITHOUT raising
+    — a silent partial drain would feed a wrong (smaller) result to
+    the correctness gate, so the query is stopped and TimeoutError
+    raised instead."""
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(f"{what} did not finish within 300s")
 
 
 def _drain(
@@ -32,17 +162,18 @@ def _drain(
     ``state_partitions`` sizes the stateful shuffle for the drained
     query (streaming queries clone the session conf at start(), and
     the count is locked into the checkpoint at first batch — so the
-    live conf can be restored immediately). The testdata drains carry
+    live conf is restored as soon as start() returns; scoped_conf
+    holds its lock meanwhile, so concurrent drains cannot leave the
+    session at each other's value). The testdata drains carry
     thousands-to-100k state rows; every extra partition is a state
     store instance spun up per batch, which dominates wall time at
     this scale. A production deployment with billions of keys passes
     None (session default) or a sized value."""
     name = f"q_{uuid.uuid4().hex[:10]}"
-    prev_parts = None
+    conf = {}
     if state_partitions is not None:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
+    with scoped_conf(spark, conf):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -50,17 +181,7 @@ def _drain(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    # awaitTermination(timeout) returns False on expiry WITHOUT
-    # raising — a silent partial drain would feed a wrong (smaller)
-    # result to the correctness gate, so fail loudly instead.
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            f"bounded drain {name} did not finish within 300s"
-        )
+    _await(q, f"bounded drain {name}")
     return spark.table(name)
 
 
@@ -83,8 +204,6 @@ def _drain_files(df: DataFrame, spark: SparkSession, prefix: str) -> DataFrame:
     (and its full drained table) per invocation; frames returned by
     EARLIER drains of the same prefix are invalidated by the wipe,
     which matches the memory sink's same-name-requery semantics."""
-    import shutil
-
     root = _plants_scratch_dir(prefix)
     shutil.rmtree(root, ignore_errors=True)
     q = (
@@ -95,16 +214,49 @@ def _drain_files(df: DataFrame, spark: SparkSession, prefix: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(f"file drain {root} did not finish within 300s")
-    import os
-
+    _await(q, f"file drain {root}")
     if not os.path.isdir(f"{root}/data"):
         # zero committed microbatches: the parquet sink never creates
         # the path — mirror the memory sink's empty-table behavior
         return spark.createDataFrame([], df.schema)
     return spark.read.schema(df.schema).parquet(f"{root}/data")
+
+
+_PLANT_DIRS: dict[str, str] = {}
+
+
+def _plants_scratch_dir(prefix: str) -> str:
+    """Per-process scratch dir for a planted stream or a file drain
+    (code review: a fixed shared path collides under concurrent
+    sessions — one run's overwrite deletes part files another run's
+    file stream is reading; and r9's third copy of this helper was the
+    drift class the ip_col() docstring warns about, so it is ONE
+    helper now). Serial overwrites within a process are safe; the
+    dirs are ~KBs and die with /tmp."""
+    if prefix not in _PLANT_DIRS:
+        _PLANT_DIRS[prefix] = tempfile.mkdtemp(prefix=prefix)
+    return _PLANT_DIRS[prefix]
+
+
+def _plant_stream(
+    spark: SparkSession, prefix: str, plants_df: DataFrame
+) -> DataFrame:
+    """The planted rows as a SECOND file stream for the twin to
+    unionByName onto its event stream (a batch-side union is not
+    expressible in a streaming query): ``plants_df`` is written to the
+    per-process scratch dir for ``prefix`` and read back with the
+    frame's own schema. If a drain returns only natural keys, the
+    plant source didn't attach."""
+    path = _plants_scratch_dir(prefix)
+    plants_df.coalesce(1).write.mode("overwrite").parquet(path)
+    return spark.readStream.schema(plants_df.schema).parquet(path)
+
+
+def _late0(sql: str) -> str:
+    """A shared batch oracle plus the kernel's ``late_count`` pinned
+    to 0: the drain runs in time order, so the late-row guard never
+    fires, and a drain that ever exercised it would hash-mismatch."""
+    return f"SELECT m.*, CAST(0 AS BIGINT) AS late_count FROM ({sql}) m"
 
 
 @register(
@@ -287,10 +439,8 @@ def stream_exec_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFram
     in one microbatch, so the join output equals the batch join. The
     seconds math is µs/1e6 double division on both engines —
     bit-identical."""
-    from kawa_spark.io import table as batch_table
-
     dim = (
-        batch_table(spark, sf_dir, "events")
+        table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.min("ts").alias("first_seen"))
     )
@@ -324,10 +474,6 @@ def stream_exec_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     back. Oracle-checkable: the materialized table equals the batch
     hourly aggregate (idempotent dynamic-partition overwrite; DECIMAL
     sums are order-independent, so parallel and sequential agree)."""
-    import tempfile
-
-    from kawa_spark.streaming.rollup import read_rollup, start_incremental_rollup
-
     base = tempfile.mkdtemp(prefix="kawa_rollup_")
     # State here is hours × event types (~thousands of rows), so TWO
     # store knobs pay off (r8 conf sweep, docs/STATUS.md):
@@ -343,15 +489,15 @@ def stream_exec_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     #   the provider choice keys on STATE size, never input size.
     #   Each call uses a fresh checkpoint, so flipping the provider
     #   per-query is safe (it's locked into a checkpoint at first
-    #   batch; the streaming query captures a cloned conf at start).
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    saved_prov = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
+    #   batch; the streaming query captures a cloned conf at start,
+    #   so the scope covers start() only).
+    provider = (
         "org.apache.spark.sql.execution.streaming.state."
-        "HDFSBackedStateStoreProvider",
+        "HDFSBackedStateStoreProvider"
     )
-    try:
+    with scoped_conf(
+        spark, {"spark.sql.streaming.stateStore.providerClass": provider}
+    ):
         q = start_incremental_rollup(
             spark,
             stream_table(spark, sf_dir, "events"),
@@ -360,16 +506,7 @@ def stream_exec_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFram
             available_now=True,
             state_partitions=1,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "incremental rollup drain did not finish within 300s"
-            )
-    finally:
-        if saved_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, saved_prov)
+    _await(q, "incremental rollup drain")
     return read_rollup(spark, f"{base}/table")
 
 
@@ -387,11 +524,6 @@ def stream_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded microbatch of 1 M envelope rows through the streaming
     engine into a counting sink; returns a 1-row DataFrame with the
     count for the rows-check."""
-    from pyspark.sql import Observation
-
-    from kawa_spark.envelope import normalize
-    from kawa_spark.sources.file import RateSource
-
     # partitions = available cores: the reference pays no partitioning
     # tax, so neither should the Spark twin
     par = spark.sparkContext.defaultParallelism
@@ -437,8 +569,6 @@ def stream_exec_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bisect-based counting over merged state+batch times reproduces
     the RANGE frame's tied-timestamp peer semantics exactly, so the
     bounded drain hash-matches the batch SQL."""
-    from kawa_spark.streaming.stateful import rate_limited
-
     return _drain(
         rate_limited(
             stream_table(spark, sf_dir, "events"), RATE_WINDOW_US, RATE_LIMIT
@@ -447,16 +577,7 @@ def stream_exec_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _first_seen_oracle() -> str:
-    from kawa_spark.queries.security import FIRST_SEEN_SQL
-
-    return FIRST_SEEN_SQL
-
-
-@register(
-    "stream_exec_first_seen",
-    oracle=_first_seen_oracle(),
-)
+@register("stream_exec_first_seen", oracle=FIRST_SEEN_SQL)
 def stream_exec_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_first_seen's pair inventory maintained ONLINE: the
     (user_id, event_type) -> MIN(ts) aggregate runs through the real
@@ -475,8 +596,6 @@ def stream_exec_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     emergence curve is the read-side batch pass over the (tiny)
     drained state — at 100 TB/day the pair table is still orders of
     magnitude smaller than the stream."""
-    from kawa_spark.queries.security import first_seen_curve
-
     e = stream_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("ts_us")
     )
@@ -489,37 +608,9 @@ def stream_exec_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return first_seen_curve(p)
 
 
-_PLANT_DIRS: dict[str, str] = {}
-
-
-def _plants_scratch_dir(prefix: str) -> str:
-    """Per-process scratch dir for a planted stream (code review: a
-    fixed shared path collides under concurrent sessions — one run's
-    overwrite deletes part files another run's file stream is
-    reading; and r9's third copy of this helper was the drift class
-    the ip_col() docstring warns about, so it is ONE helper now).
-    Serial overwrites within a process are safe; the dirs are ~KBs
-    and die with /tmp."""
-    if prefix not in _PLANT_DIRS:
-        import tempfile
-
-        _PLANT_DIRS[prefix] = tempfile.mkdtemp(prefix=prefix)
-    return _PLANT_DIRS[prefix]
-
-
-def _beacon_plants_dir() -> str:
-    return _plants_scratch_dir("kawa_beacon_plants_")
-
-
-def _beacon_oracle() -> str:
-    from kawa_spark.queries.security import (
-        BEACON_CV2_DEN,
-        BEACON_CV2_NUM,
-        BEACON_MIN_GAPS,
-        PLANTS_SQL,
-    )
-
-    return f"""
+@register(
+    "stream_exec_beaconing",
+    oracle=f"""
     WITH ev AS (
       SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id
       FROM events
@@ -549,10 +640,8 @@ def _beacon_oracle() -> str:
               <= {BEACON_CV2_NUM} * (sd * sd)) AS is_beacon,
            CAST(0 AS BIGINT) AS late_count
     FROM s WHERE n >= {BEACON_MIN_GAPS}
-    """
-
-
-@register("stream_exec_beaconing", oracle=_beacon_oracle())
+    """,
+)
 def stream_exec_beaconing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_beaconing maintained ONLINE: per-(user, type) gap power
     sums through the real streaming runtime
@@ -574,30 +663,18 @@ def stream_exec_beaconing(spark: SparkSession, sf_dir: str) -> DataFrame:
     row carries the kernel's cumulative late-row counter and the
     oracle pins it to 0, so a drain that ever exercised the late-row
     guard would hash-mismatch (the banked r9 observability item)."""
-    from kawa_spark.queries.security import (
-        BEACON_CV2_DEN,
-        BEACON_CV2_NUM,
-        BEACON_MIN_GAPS,
-        _planted_beacons,
-    )
-    from kawa_spark.streaming.stateful import beacon_scores
-
     e = stream_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "event_id", "ts"
     )
-    plants_dir = _beacon_plants_dir()
-    _planted_beacons(spark).select(
-        "user_id",
-        "event_type",
-        F.timestamp_micros("ts_us").alias("ts"),
-        "event_id",
-    ).coalesce(1).write.mode("overwrite").parquet(plants_dir)
-    p = (
-        spark.readStream.schema(
-            "user_id long, event_type string, ts timestamp, event_id long"
-        )
-        .parquet(plants_dir)
-        .select("user_id", "event_type", "event_id", "ts")
+    p = _plant_stream(
+        spark,
+        "kawa_beacon_plants_",
+        _planted_beacons(spark).select(
+            "user_id",
+            "event_type",
+            "event_id",
+            F.timestamp_micros("ts_us").alias("ts"),
+        ),
     )
     return _drain(
         beacon_scores(
@@ -610,22 +687,8 @@ def stream_exec_beaconing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _impossible_travel_oracle() -> str:
-    # The shared batch matrix plus the pinned-to-0 late counter: the
-    # kernel's late-row guard is OBSERVABLE (beacon pattern), and the
-    # drain runs in time order, so MAX(late_count) over every hop
-    # feeding a cell must be 0 — hash-checked, not documented.
-    from kawa_spark.queries.security import IMPOSSIBLE_TRAVEL_SQL
-
-    return (
-        "SELECT m.*, CAST(0 AS BIGINT) AS late_count FROM ("
-        + IMPOSSIBLE_TRAVEL_SQL
-        + ") m"
-    )
-
-
 @register(
-    "stream_exec_impossible_travel", oracle=_impossible_travel_oracle()
+    "stream_exec_impossible_travel", oracle=_late0(IMPOSSIBLE_TRAVEL_SQL)
 )
 def stream_exec_impossible_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_impossible_travel's stateful half run ONLINE: each
@@ -646,14 +709,6 @@ def stream_exec_impossible_travel(spark: SparkSession, sf_dir: str) -> DataFrame
     item 6): each hop carries the kernel's cumulative late-row
     counter, the rollup emits MAX(late_count) per cell, and the
     oracle pins it to 0."""
-    from kawa_spark.queries.security import (
-        HOP_WINDOW_US,
-        ip_col,
-        longest_prefix_match,
-        nets_df,
-    )
-    from kawa_spark.streaming.stateful import net_hops
-
     e = stream_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -670,22 +725,8 @@ def stream_exec_impossible_travel(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _session_rarity_oracle() -> str:
-    # The shared batch scorer plus the pinned-to-0 late counter: the
-    # sessionizer kernel's late-row guard is OBSERVABLE (beacon
-    # pattern), and the drain runs in time order, so the per-session
-    # MAX(late_count) must be 0 — hash-checked, not documented.
-    from kawa_spark.queries.security import SESSION_RARITY_SQL
-
-    return (
-        "SELECT s.*, CAST(0 AS BIGINT) AS late_count FROM ("
-        + SESSION_RARITY_SQL
-        + ") s"
-    )
-
-
 @register(
-    "stream_exec_session_rarity", oracle=_session_rarity_oracle()
+    "stream_exec_session_rarity", oracle=_late0(SESSION_RARITY_SQL)
 )
 def stream_exec_session_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_session_rarity's stateful half run ONLINE: the
@@ -713,12 +754,6 @@ def stream_exec_session_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     now DRIVER-CHECKED (VERDICT r9 item 6): each transition carries
     the kernel's cumulative late-row counter, the key emits the
     per-session MAX, and the oracle pins it to 0."""
-    from kawa_spark.queries.security import (
-        SESSION_GAP_US,
-        score_transitions,
-    )
-    from kawa_spark.streaming.stateful import session_transitions
-
     e = stream_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -747,13 +782,7 @@ def stream_exec_session_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _template_drift_oracle() -> str:
-    from kawa_spark.queries.logs import TEMPLATE_DRIFT_SQL
-
-    return TEMPLATE_DRIFT_SQL
-
-
-@register("stream_exec_template_drift", oracle=_template_drift_oracle())
+@register("stream_exec_template_drift", oracle=TEMPLATE_DRIFT_SQL)
 def stream_exec_template_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """logs_template_drift maintained ONLINE: the per-(template, day)
     line counts run as a streaming aggregation (masking is stateless
@@ -772,12 +801,6 @@ def stream_exec_template_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark can't chain the drift windows onto a streaming aggregate in
     one query, so the report is the read-side batch pass over the
     (tiny) drained counts — the stream_exec_first_seen shape."""
-    from kawa_spark.queries.logs import (
-        daily_template_counts,
-        mask_template,
-        raw_msg_col,
-    )
-
     e = stream_table(spark, sf_dir, "events")
     daily = daily_template_counts(
         e.select(
@@ -789,22 +812,11 @@ def stream_exec_template_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream_exec_tumbling reasoning (store count follows state
     # volume).
     counts = _drain(daily, spark, mode="complete", state_partitions=2)
-    from kawa_spark.queries.logs import drift_report
 
     return drift_report(counts)
 
 
-def _mad_plants_dir() -> str:
-    return _plants_scratch_dir("kawa_mad_plants_")
-
-
-def _anomaly_mad_oracle() -> str:
-    from kawa_spark.queries.events import ANOMALY_MAD_SQL
-
-    return ANOMALY_MAD_SQL
-
-
-@register("stream_exec_anomaly_mad", oracle=_anomaly_mad_oracle())
+@register("stream_exec_anomaly_mad", oracle=ANOMALY_MAD_SQL)
 def stream_exec_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_anomaly_mad maintained ONLINE — the seventh
     online/offline detection twin: the per-(event_type, day) counts
@@ -830,22 +842,7 @@ def stream_exec_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: streaming state = |types| × |live days| counters; per-batch
     work is the map-side partial count; the scorer's windows and
     broadcast joins run on the tiny drained table."""
-    from kawa_spark.queries.events import (
-        DAY_US,
-        _mad_planted,
-        mad_scores,
-    )
-    from kawa_spark.functions.exact import floordiv
-
-    plants_dir = _mad_plants_dir()
-    _mad_planted(spark).coalesce(1).write.mode("overwrite").parquet(
-        plants_dir
-    )
-    p = (
-        spark.readStream.schema("event_type string, ts_us long")
-        .parquet(plants_dir)
-        .select("event_type", "ts_us")
-    )
+    p = _plant_stream(spark, "kawa_mad_plants_", _mad_planted(spark))
     e = stream_table(spark, sf_dir, "events").select(
         "event_type", F.unix_micros("ts").alias("ts_us")
     )
@@ -868,13 +865,7 @@ def stream_exec_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mad_scores(counts)
 
 
-def _funnel_oracle() -> str:
-    from kawa_spark.queries.events import FUNNEL_SQL
-
-    return FUNNEL_SQL
-
-
-@register("stream_exec_funnel", oracle=_funnel_oracle())
+@register("stream_exec_funnel", oracle=FUNNEL_SQL)
 def stream_exec_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_funnel maintained ONLINE — the eighth online/offline
     detection twin, and a genuinely new state shape: the kernel
@@ -893,8 +884,6 @@ def stream_exec_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     late-row guard counted in-state (the beacon observability
     pattern — surfaced on kernel emissions; the rollup drops it to
     keep the oracle shared verbatim)."""
-    from kawa_spark.streaming.stateful import funnel_states
-
     e = stream_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -915,13 +904,7 @@ def stream_exec_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dga_oracle() -> str:
-    from kawa_spark.queries.security import DGA_SCORE_SQL
-
-    return DGA_SCORE_SQL
-
-
-@register("stream_exec_dga_score", oracle=_dga_oracle())
+@register("stream_exec_dga_score", oracle=DGA_SCORE_SQL)
 def stream_exec_dga_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """logs_dga_score maintained ONLINE — the ninth online/offline
     detection twin: the domain derivation is stateless map-side work
@@ -939,8 +922,6 @@ def stream_exec_dga_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: streaming state = live (domain, user) pairs — the same
     inventory a first-seen detector holds; the rollup and char math
     run on the drained pair table (≪ stream volume)."""
-    from kawa_spark.queries.security import dga_features, domain_col
-
     e = stream_table(spark, sf_dir, "events").select(
         "event_id", "user_id", domain_col().alias("domain")
     )
@@ -955,17 +936,7 @@ def stream_exec_dga_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dga_features(agg)
 
 
-def _spray_plants_dir() -> str:
-    return _plants_scratch_dir("kawa_spray_plants_")
-
-
-def _spray_oracle() -> str:
-    from kawa_spark.queries.security import PASSWORD_SPRAY_SQL
-
-    return PASSWORD_SPRAY_SQL
-
-
-@register("stream_exec_password_spray", oracle=_spray_oracle())
+@register("stream_exec_password_spray", oracle=PASSWORD_SPRAY_SQL)
 def stream_exec_password_spray(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_password_spray maintained ONLINE — the tenth
     online/offline detection twin. The address attribution is
@@ -985,16 +956,6 @@ def stream_exec_password_spray(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per account a network touched in an hour, the exact inventory
     the detection needs and far below event volume; the rollup runs
     on the drained triple table."""
-    from kawa_spark.functions.exact import floordiv
-    from kawa_spark.queries.events import HOUR_US
-    from kawa_spark.queries.security import (
-        SPRAY_MIN_USERS,
-        _planted_spray,
-        ip_col,
-        longest_prefix_match,
-        nets_df,
-    )
-
     e = (
         stream_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "signup")
@@ -1005,13 +966,7 @@ def stream_exec_password_spray(spark: SparkSession, sf_dir: str) -> DataFrame:
             ip_col(),
         )
     )
-    plants_dir = _spray_plants_dir()
-    _planted_spray(spark).coalesce(1).write.mode("overwrite").parquet(
-        plants_dir
-    )
-    p = spark.readStream.schema(
-        "event_id long, user_id long, ts_us long, ip long"
-    ).parquet(plants_dir)
+    p = _plant_stream(spark, "kawa_spray_plants_", _planted_spray(spark))
     m = longest_prefix_match(e.unionByName(p), nets_df(spark))
     triples = m.groupBy(
         "net",
@@ -1031,17 +986,7 @@ def stream_exec_password_spray(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _typo_plants_dir() -> str:
-    return _plants_scratch_dir("kawa_typo_plants_")
-
-
-def _typosquat_oracle() -> str:
-    from kawa_spark.queries.security import TYPOSQUAT_SQL
-
-    return TYPOSQUAT_SQL
-
-
-@register("stream_exec_typosquat", oracle=_typosquat_oracle())
+@register("stream_exec_typosquat", oracle=TYPOSQUAT_SQL)
 def stream_exec_typosquat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """logs_typosquat maintained ONLINE — the eleventh online/offline
     detection twin (the banked r10 candidate exactly as STATUS
@@ -1063,24 +1008,16 @@ def stream_exec_typosquat(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-seen inventory, far below event volume; the metric join
     runs on the drained per-domain rollup (|domains| x |whitelist|),
     never on the stream itself."""
-    from kawa_spark.queries.security import (
-        DGA_VOCAB,
-        TYPOSQUAT_MAX_DIST,
-        _typo_plant_rows,
-        domain_col,
-        typosquat_matches,
-    )
-
     e = stream_table(spark, sf_dir, "events").select(
         "event_id", "user_id", domain_col().alias("domain")
     )
-    plants_dir = _typo_plants_dir()
-    spark.createDataFrame(
-        _typo_plant_rows(), "event_id long, user_id long, domain string"
-    ).coalesce(1).write.mode("overwrite").parquet(plants_dir)
-    p = spark.readStream.schema(
-        "event_id long, user_id long, domain string"
-    ).parquet(plants_dir)
+    p = _plant_stream(
+        spark,
+        "kawa_typo_plants_",
+        spark.createDataFrame(
+            _typo_plant_rows(), "event_id long, user_id long, domain string"
+        ),
+    )
     pairs = (
         e.unionByName(p)
         .groupBy("domain", "user_id")
@@ -1095,24 +1032,8 @@ def stream_exec_typosquat(spark: SparkSession, sf_dir: str) -> DataFrame:
     return typosquat_matches(agg, wl, TYPOSQUAT_MAX_DIST)
 
 
-def _lm_plants_dir() -> str:
-    return _plants_scratch_dir("kawa_lm_plants_")
-
-
-def _lateral_movement_oracle() -> str:
-    # Shared batch inventory + the pinned-to-0 late counter (the
-    # impossible-travel precedent).
-    from kawa_spark.queries.security import LATERAL_MOVEMENT_SQL
-
-    return (
-        "SELECT m.*, CAST(0 AS BIGINT) AS late_count FROM ("
-        + LATERAL_MOVEMENT_SQL
-        + ") m"
-    )
-
-
 @register(
-    "stream_exec_lateral_movement", oracle=_lateral_movement_oracle()
+    "stream_exec_lateral_movement", oracle=_late0(LATERAL_MOVEMENT_SQL)
 )
 def stream_exec_lateral_movement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_lateral_movement's stateful half run ONLINE — the
@@ -1133,33 +1054,18 @@ def stream_exec_lateral_movement(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-drain rollup shuffles only surviving chains onto
     |nets|³-bounded keys. Same time-ordered-batch contract as the
     other gap kernels, DRIVER-CHECKED via late_count."""
-    from kawa_spark.queries.security import (
-        CHAIN_WINDOW_US,
-        HOP_WINDOW_US,
-        _lm_plant_rows,
-        ip_col,
-        longest_prefix_match,
-        nets_df,
-    )
-    from kawa_spark.streaming.stateful import net_hop_chains
-
     e = stream_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         F.unix_micros("ts").alias("us"),
         ip_col(),
     )
-    plants_dir = _lm_plants_dir()
-    spark.createDataFrame(
-        _lm_plant_rows(),
-        "event_id long, user_id long, us long, ip long",
-    ).coalesce(1).write.mode("overwrite").parquet(plants_dir)
-    p = (
-        spark.readStream.schema(
-            "event_id long, user_id long, us long, ip long"
-        )
-        .parquet(plants_dir)
-        .select("user_id", "event_id", "us", "ip")
+    p = _plant_stream(
+        spark,
+        "kawa_lm_plants_",
+        spark.createDataFrame(
+            _lm_plant_rows(), "event_id long, user_id long, us long, ip long"
+        ),
     )
     m = longest_prefix_match(e.unionByName(p), nets_df(spark)).drop(
         "plen", "ip"
@@ -1188,17 +1094,7 @@ def stream_exec_lateral_movement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dow_plants_dir() -> str:
-    return _plants_scratch_dir("kawa_dow_plants_")
-
-
-def _dow_assoc_oracle() -> str:
-    from kawa_spark.queries.events import DOW_ASSOC_SQL
-
-    return DOW_ASSOC_SQL
-
-
-@register("stream_exec_dow_association", oracle=_dow_assoc_oracle())
+@register("stream_exec_dow_association", oracle=DOW_ASSOC_SQL)
 def stream_exec_dow_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_dow_association maintained ONLINE — the twelfth
     online/offline twin: the day-of-week derivation is stateless
@@ -1216,23 +1112,10 @@ def stream_exec_dow_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types|·7 rows regardless of volume, the cheapest state any twin
     here holds; the scorer runs on the drained cell table with
     broadcast marginals."""
-    from kawa_spark.functions.exact import floordiv
-    from kawa_spark.queries.events import (
-        DAY_US,
-        _dow_planted,
-        dow_association,
-    )
-
     e = stream_table(spark, sf_dir, "events").select(
         "event_type", F.unix_micros("ts").alias("ts_us")
     )
-    plants_dir = _dow_plants_dir()
-    _dow_planted(spark).coalesce(1).write.mode("overwrite").parquet(
-        plants_dir
-    )
-    p = spark.readStream.schema(
-        "event_type string, ts_us long"
-    ).parquet(plants_dir)
+    p = _plant_stream(spark, "kawa_dow_plants_", _dow_planted(spark))
     cells = (
         e.unionByName(p)
         .groupBy(
@@ -1252,24 +1135,8 @@ def stream_exec_dow_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dow_association(drained)
 
 
-def _lm3_plants_dir() -> str:
-    return _plants_scratch_dir("kawa_lm3_plants_")
-
-
-def _lateral3_oracle() -> str:
-    # Shared batch inventory + the pinned-to-0 late counter (the
-    # impossible-travel precedent).
-    from kawa_spark.queries.security import LATERAL_3HOP_SQL
-
-    return (
-        "SELECT m.*, CAST(0 AS BIGINT) AS late_count FROM ("
-        + LATERAL_3HOP_SQL
-        + ") m"
-    )
-
-
 @register(
-    "stream_exec_lateral_movement_3hop", oracle=_lateral3_oracle()
+    "stream_exec_lateral_movement_3hop", oracle=_late0(LATERAL_3HOP_SQL)
 )
 def stream_exec_lateral_movement_3hop(
     spark: SparkSession, sf_dir: str
@@ -1283,33 +1150,18 @@ def stream_exec_lateral_movement_3hop(
     pinned to 0 (time-ordered-batch contract, driver-checked). The
     CIDR match stays stateless map-side LPM; the LM3 plant walks
     ride the stream as a second file source."""
-    from kawa_spark.queries.security import (
-        CHAIN3_WINDOW_US,
-        HOP_WINDOW_US,
-        _lm3_plant_rows,
-        ip_col,
-        longest_prefix_match,
-        nets_df,
-    )
-    from kawa_spark.streaming.stateful import net_hop_chains3
-
     e = stream_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         F.unix_micros("ts").alias("us"),
         ip_col(),
     )
-    plants_dir = _lm3_plants_dir()
-    spark.createDataFrame(
-        _lm3_plant_rows(),
-        "event_id long, user_id long, us long, ip long",
-    ).coalesce(1).write.mode("overwrite").parquet(plants_dir)
-    p = (
-        spark.readStream.schema(
-            "event_id long, user_id long, us long, ip long"
-        )
-        .parquet(plants_dir)
-        .select("user_id", "event_id", "us", "ip")
+    p = _plant_stream(
+        spark,
+        "kawa_lm3_plants_",
+        spark.createDataFrame(
+            _lm3_plant_rows(), "event_id long, user_id long, us long, ip long"
+        ),
     )
     m = longest_prefix_match(e.unionByName(p), nets_df(spark)).drop(
         "plen", "ip"
@@ -1339,17 +1191,7 @@ def stream_exec_lateral_movement_3hop(
     )
 
 
-def _dow_drift_plants_dir() -> str:
-    return _plants_scratch_dir("kawa_dowdrift_plants_")
-
-
-def _dow_drift_oracle() -> str:
-    from kawa_spark.queries.events import DOW_DRIFT_SQL
-
-    return DOW_DRIFT_SQL
-
-
-@register("stream_exec_dow_drift", oracle=_dow_drift_oracle())
+@register("stream_exec_dow_drift", oracle=DOW_DRIFT_SQL)
 def stream_exec_dow_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_dow_drift maintained ONLINE — the sixteenth
     online/offline twin: week/dow derivation is stateless map-side
@@ -1369,24 +1211,12 @@ def stream_exec_dow_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     production deployment a watermark on the week column would expire
     closed weeks. The scorer's windows run over the drained cell
     table (≤ |types|·weeks·7 rows)."""
-    from kawa_spark.functions.exact import floordiv
-    from kawa_spark.queries.events import (
-        DAY_US,
-        WEEK_US,
-        _dow_drift_planted,
-        dow_drift_report,
-    )
-
     e = stream_table(spark, sf_dir, "events").select(
         "event_type", F.unix_micros("ts").alias("ts_us")
     )
-    plants_dir = _dow_drift_plants_dir()
-    _dow_drift_planted(spark).coalesce(1).write.mode("overwrite").parquet(
-        plants_dir
+    p = _plant_stream(
+        spark, "kawa_dowdrift_plants_", _dow_drift_planted(spark)
     )
-    p = spark.readStream.schema(
-        "event_type string, ts_us long"
-    ).parquet(plants_dir)
     cells = (
         e.unionByName(p)
         .groupBy(
@@ -1400,17 +1230,7 @@ def stream_exec_dow_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dow_drift_report(drained)
 
 
-def _inc_dedup_plants_dir() -> str:
-    return _plants_scratch_dir("kawa_incdedup_plants_")
-
-
-def _inc_dedup_oracle() -> str:
-    from kawa_spark.queries.llm_dedup import INCREMENTAL_DEDUP_SQL
-
-    return INCREMENTAL_DEDUP_SQL
-
-
-@register("stream_exec_dedup_incremental", oracle=_inc_dedup_oracle())
+@register("stream_exec_dedup_incremental", oracle=INCREMENTAL_DEDUP_SQL)
 def stream_exec_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_incremental maintained ONLINE — the seventeenth
     online/offline twin, and the production shape of cross-snapshot
@@ -1438,16 +1258,6 @@ def stream_exec_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     16-byte digest for the keeper state; the prior index is the same
     broadcast/bucketed story as the batch key. The final classify
     join runs on the two drained legs (|batch| + |digests| rows)."""
-    from kawa_spark.queries.llm_dedup import (
-        INC_PLANTS_NEW,
-        INC_PLANTS_PRIOR,
-        _norm_digest,
-        classify_incremental,
-        is_prior_doc,
-        prior_digest_index,
-        snapshot_split,
-    )
-
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     # batch side: the shared split builds the prior kept set (the new
     # half is discarded here — it arrives as the STREAM below)
@@ -1456,12 +1266,10 @@ def stream_exec_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
 
     s = stream_table(spark, sf_dir, "documents").select("doc_id", "text")
     sn = s.filter(~is_prior_doc(F.col("doc_id")))
-    plants_dir = _inc_dedup_plants_dir()
-    spark.createDataFrame(
-        INC_PLANTS_NEW, "doc_id long, text string"
-    ).coalesce(1).write.mode("overwrite").parquet(plants_dir)
-    p = spark.readStream.schema("doc_id long, text string").parquet(
-        plants_dir
+    p = _plant_stream(
+        spark,
+        "kawa_incdedup_plants_",
+        spark.createDataFrame(INC_PLANTS_NEW, "doc_id long, text string"),
     )
     nh = sn.unionByName(p).select(
         "doc_id", _norm_digest(F.col("text")).alias("h")
@@ -1476,17 +1284,9 @@ def stream_exec_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     return classify_incremental(enriched.join(keeper, "h"))
 
 
-def _inc_mh_plants_dir() -> str:
-    return _plants_scratch_dir("kawa_incmh_plants_")
-
-
-def _inc_mh_oracle() -> str:
-    from kawa_spark.queries.llm_dedup import _inc_minhash_oracle
-
-    return _inc_minhash_oracle()
-
-
-@register("stream_exec_dedup_incremental_minhash", oracle=_inc_mh_oracle())
+@register(
+    "stream_exec_dedup_incremental_minhash", oracle=_inc_minhash_oracle()
+)
 def stream_exec_dedup_incremental_minhash(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1525,15 +1325,6 @@ def stream_exec_dedup_incremental_minhash(
     half's self-join). This is literally the production shape — the
     stream writes the day's signature table where the next snapshot's
     prior state will be read from."""
-    from kawa_spark.queries.llm_dedup import (
-        INC_MH_PLANTS_NEW,
-        INC_MH_PLANTS_PRIOR,
-        incremental_minhash_from_sigs,
-        is_prior_doc,
-        minhash_signatures,
-        snapshot_split,
-    )
-
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     # batch side: the shared split builds the prior kept corpus (the
     # new half is discarded here — it arrives as the STREAM below)
@@ -1544,12 +1335,10 @@ def stream_exec_dedup_incremental_minhash(
 
     s = stream_table(spark, sf_dir, "documents").select("doc_id", "text")
     sn = s.filter(~is_prior_doc(F.col("doc_id")))
-    plants_dir = _inc_mh_plants_dir()
-    spark.createDataFrame(
-        INC_MH_PLANTS_NEW, "doc_id long, text string"
-    ).coalesce(1).write.mode("overwrite").parquet(plants_dir)
-    p = spark.readStream.schema("doc_id long, text string").parquet(
-        plants_dir
+    p = _plant_stream(
+        spark,
+        "kawa_incmh_plants_",
+        spark.createDataFrame(INC_MH_PLANTS_NEW, "doc_id long, text string"),
     )
     sig_stream = minhash_signatures(
         sn.unionByName(p).withColumn("side", F.lit("n")),
@@ -1573,18 +1362,9 @@ def stream_exec_dedup_incremental_minhash(
         prior_sig.unpersist()
 
 
-def _inc_emb_plants_dir() -> str:
-    return _plants_scratch_dir("kawa_incemb_plants_")
-
-
-def _inc_emb_oracle() -> str:
-    from kawa_spark.queries.llm_similarity import _inc_embedding_oracle
-
-    return _inc_embedding_oracle()
-
-
 @register(
-    "stream_exec_dedup_incremental_embedding", oracle=_inc_emb_oracle()
+    "stream_exec_dedup_incremental_embedding",
+    oracle=_inc_embedding_oracle(),
 )
 def stream_exec_dedup_incremental_embedding(
     spark: SparkSession, sf_dir: str
@@ -1619,32 +1399,27 @@ def stream_exec_dedup_incremental_embedding(
     Runtime state is zero rows — the only streaming stage is
     stateless — and the drained sig table is the parquet state the
     next snapshot's prior side reads: the production shape."""
-    from kawa_spark.queries.llm_dedup import is_prior_doc
-    from kawa_spark.queries.llm_similarity import (
-        EMB_INC_PLANT_N,
-        embedding_sigs,
-        incremental_embedding_from_sigs,
-    )
-
     base = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     prior = base.filter(is_prior_doc(F.col("vec_id")))
     prior_sig = embedding_sigs(prior.withColumn("side", F.lit("p")))
 
-    plants_dir = _inc_emb_plants_dir()
-    prior.filter(F.col("vec_id") < EMB_INC_PLANT_N).select(
-        (F.col("vec_id") + F.lit(3000000)).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(1.25)).alias("embedding"),
-    ).coalesce(1).write.mode("overwrite").parquet(plants_dir)
+    p = _plant_stream(
+        spark,
+        "kawa_incemb_plants_",
+        prior.filter(F.col("vec_id") < EMB_INC_PLANT_N).select(
+            (F.col("vec_id") + F.lit(3000000)).alias("vec_id"),
+            F.transform("embedding", lambda x: x * F.lit(1.25)).alias(
+                "embedding"
+            ),
+        ),
+    )
 
     s = stream_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     sn = s.filter(~is_prior_doc(F.col("vec_id")))
-    p = spark.readStream.schema(
-        "vec_id long, embedding array<double>"
-    ).parquet(plants_dir)
     sig_stream = embedding_sigs(
         sn.unionByName(p).withColumn("side", F.lit("n")), persist=False
     )
@@ -1662,17 +1437,7 @@ def stream_exec_dedup_incremental_embedding(
         prior_sig.unpersist()
 
 
-def _inc_img_plants_dir() -> str:
-    return _plants_scratch_dir("kawa_incimg_plants_")
-
-
-def _inc_img_oracle() -> str:
-    from kawa_spark.queries.llm_multimodal import _inc_image_sql
-
-    return _inc_image_sql()
-
-
-@register("stream_exec_dedup_incremental_image", oracle=_inc_img_oracle())
+@register("stream_exec_dedup_incremental_image", oracle=_inc_image_sql())
 def stream_exec_dedup_incremental_image(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1702,14 +1467,6 @@ def stream_exec_dedup_incremental_image(
     side reads (8 bytes + id per image). Runtime state is zero rows.
 
     kawa parity: none; mandate (M) multimodal + dedup extension."""
-    from kawa_spark.queries.llm_dedup import is_prior_doc
-    from kawa_spark.queries.llm_multimodal import (
-        _dhash_int,
-        _inc_image_plants,
-        image_hashes,
-        incremental_image_from_hashes,
-    )
-
     prior_plants, new_plants = _inc_image_plants()
     d = (
         table(spark, sf_dir, "documents")
@@ -1730,16 +1487,14 @@ def stream_exec_dedup_incremental_image(
         _dhash_int().alias("dhash_int"),
     ).persist()
 
-    plants_dir = _inc_img_plants_dir()
-    spark.createDataFrame(
-        new_plants, "doc_id long, text string"
-    ).coalesce(1).write.mode("overwrite").parquet(plants_dir)
+    ps = _plant_stream(
+        spark,
+        "kawa_incimg_plants_",
+        spark.createDataFrame(new_plants, "doc_id long, text string"),
+    )
     s = stream_table(spark, sf_dir, "documents").select("doc_id", "text")
     sn = s.filter(
         (~is_prior_doc(F.col("doc_id"))) & (F.length("text") > 0)
-    )
-    ps = spark.readStream.schema("doc_id long, text string").parquet(
-        plants_dir
     )
     hash_stream = image_hashes(
         sn.unionByName(ps).select(
@@ -1764,13 +1519,7 @@ def stream_exec_dedup_incremental_image(
         prior_hashed.unpersist()
 
 
-def _quantile_sketch_oracle() -> str:
-    from kawa_spark.queries.stats import QUANTILE_SKETCH_SQL
-
-    return QUANTILE_SKETCH_SQL
-
-
-@register("stream_exec_quantile_sketch", oracle=_quantile_sketch_oracle())
+@register("stream_exec_quantile_sketch", oracle=QUANTILE_SKETCH_SQL)
 def stream_exec_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """agg_quantile_sketch maintained ONLINE — the fourteenth
     online/offline twin and a genuinely new state shape: the
@@ -1796,12 +1545,6 @@ def stream_exec_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     most K rows per group per SAMPLE-CHANGING batch (churn-only
     snapshots), and the final selection + scoring runs on |types|·K
     rows."""
-    from kawa_spark.queries.stats import (
-        QSK_K,
-        quantile_sketch_scores,
-    )
-    from kawa_spark.streaming.stateful import bottom_k_sample
-
     e = stream_table(spark, sf_dir, "events").select(
         "event_type", "event_id", "value"
     )
@@ -1815,13 +1558,7 @@ def stream_exec_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantile_sketch_scores(sample, full)
 
 
-def _kmv_distinct_oracle() -> str:
-    from kawa_spark.queries.stats import KMV_DISTINCT_SQL
-
-    return KMV_DISTINCT_SQL
-
-
-@register("stream_exec_kmv_distinct", oracle=_kmv_distinct_oracle())
+@register("stream_exec_kmv_distinct", oracle=KMV_DISTINCT_SQL)
 def stream_exec_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """agg_kmv_distinct maintained ONLINE — the fifteenth twin, and
     the bottom_k_sample kernel's generality proof: a KMV cardinality
@@ -1841,9 +1578,6 @@ def stream_exec_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedent). Oracle = the batch key's SQL verbatim (shared
     KMV_DISTINCT_SQL constant). Order-insensitive and
     duplicate-idempotent — no ordering contract."""
-    from kawa_spark.queries.stats import KMV_K, _kmv_u, kmv_scores
-    from kawa_spark.streaming.stateful import bottom_k_sample
-
     e = stream_table(spark, sf_dir, "events").select(
         "event_type",
         F.col("user_id").alias("event_id"),
@@ -1877,10 +1611,6 @@ def stream_exec_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmv_scores(sk, exact)
 
 
-def _img_dedup_plants_dir() -> str:
-    return _plants_scratch_dir("kawa_imgdedup_plants_")
-
-
 def stream_exec_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """multimodal_image_dedup maintained ONLINE — the banked
     twenty-first online/offline twin candidate (docs/STATUS.md
@@ -1902,24 +1632,18 @@ def stream_exec_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned row-identical to the batch key through the real streaming
     runtime by tests/test_image_dedup.py
     ::test_streaming_twin_equals_batch_key."""
-    from kawa_spark.queries.llm_multimodal import (
-        _dhash_plant_texts,
-        image_dedup_from_hashes,
-        image_hashes,
-    )
-
     s = (
         stream_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .filter(F.length("text") > 0)
     )
     ta, tb = _dhash_plant_texts()
-    plants_dir = _img_dedup_plants_dir()
-    spark.createDataFrame(
-        [(-101, ta), (-102, tb)], "doc_id long, text string"
-    ).coalesce(1).write.mode("overwrite").parquet(plants_dir)
-    p = spark.readStream.schema("doc_id long, text string").parquet(
-        plants_dir
+    p = _plant_stream(
+        spark,
+        "kawa_imgdedup_plants_",
+        spark.createDataFrame(
+            [(-101, ta), (-102, tb)], "doc_id long, text string"
+        ),
     )
     docs = s.unionByName(p).select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")

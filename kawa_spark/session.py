@@ -19,8 +19,40 @@ The defaults here are the ones that matter at 100 TB:
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, values: dict[str, str]) -> Iterator[None]:
+    """Set session conf ``values`` for the body, then restore every key
+    to its previous value (unsetting keys that were unset) in a
+    ``finally``. The module lock is held from set to restore, so two
+    threads sharing one session cannot interleave their saves and
+    restores and leave the session at the other thread's value. The
+    lock is reentrant, so scopes nest within one thread.
+
+    Meant for ``start()`` of a streaming query, which snapshots the
+    session conf: the body should be short, because every other
+    scoped swap on the process waits for it."""
+    with _CONF_LOCK:
+        saved = {k: spark.conf.get(k, None) for k in values}
+        try:
+            for k, v in values.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
 
 def _default_shuffle_partitions() -> str:
     """Scale-adaptive INITIAL shuffle partition count (r15

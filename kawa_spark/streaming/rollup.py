@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kawa_spark.functions.exact import dec
+from kawa_spark.session import scoped_conf
 
 
 def hourly_rollup(events: DataFrame) -> DataFrame:
@@ -66,9 +67,6 @@ def start_incremental_rollup(
     corpus size; each extra partition is a RocksDB instance spun up
     per batch for no data. Callers with genuinely huge window×key
     spaces pass a bigger number. None = session default."""
-    # dynamic partition overwrite: only the partitions present in the
-    # written frame are replaced
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def flush(batch_df: DataFrame, batch_id: int) -> None:
         # Partition the table by window DATE and merge-per-partition:
@@ -112,13 +110,19 @@ def start_incremental_rollup(
                 "left_anti",
             )
             merged = changed.unionByName(keep)
-        merged.write.mode("overwrite").partitionBy("dt").parquet(path)
+        # dynamic partition overwrite as a WRITER option: only the
+        # date directories present in ``merged`` are replaced, and the
+        # session's own overwrite mode is left alone
+        merged.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("dt").parquet(path)
 
-    prev_parts = None
+    conf = {}
     if state_partitions is not None:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
+    # the query snapshots the session conf at start(), so the scope
+    # only needs to cover start()
+    with scoped_conf(spark, conf):
         writer = (
             hourly_rollup(events)
             .writeStream.outputMode("update")
@@ -130,13 +134,6 @@ def start_incremental_rollup(
         elif trigger:
             writer = writer.trigger(processingTime=trigger)
         return writer.start()
-    finally:
-        # NOTE: restored immediately — safe because the conf is
-        # captured into the query's checkpoint on its first batch,
-        # which planning reads from the writer's snapshot, not the
-        # live session conf.
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def read_rollup(spark: SparkSession, path: str) -> DataFrame:

@@ -12,13 +12,99 @@ state-store size grows with distinct keys, not event volume. A
 watermark bounds replay on recovery; timeouts would evict idle keys
 (not used here — the ops are cumulative by design).
 
+Every time-ordered kernel is a ``step`` function run by the one
+ordered-fold shell, ``_ordered_fold``, whose docstring states the
+chunk handling and the time-ordered-batch contract once.
+
 Closures are self-contained (pandas-only) — see shipping.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
+
+
+def _ordered_fold(
+    events: DataFrame,
+    cols: list,
+    keys: list[str],
+    order: list[str],
+    step,
+    out_schema: str,
+    state_schema: str,
+) -> DataFrame:
+    """The one ordered-fold shell behind every time-ordered kernel:
+    ``select(cols)`` → ``groupBy(keys)`` → ``applyInPandasWithState``
+    (append mode, NoTimeout), with each key's microbatch rows handed
+    to ``step`` sorted on ``order``.
+
+    ``step(key, pdf, state)`` gets the key's non-empty, sorted rows
+    and its stored state tuple (None for a new key), and returns
+    ``(new_state, out)`` where ``out`` is a pandas frame of output
+    rows or None. A key whose chunks are all empty is not stepped:
+    with NoTimeout its stored state persists untouched. The worker
+    closure references only closure cells and local imports
+    (shipping.py's self-contained policy), so ``step`` must be a
+    nested function with local imports too.
+
+    CHUNKS: Spark hands a hot key's microbatch to the worker as
+    multiple Arrow chunks (maxRecordsPerBatch, default 10k) in no
+    particular time order. Folding per chunk would fold rows out of
+    order, miss cross-chunk peers and evict state a later chunk still
+    needs, so the chunks are concatenated, then sorted on ``order``.
+    That costs per-(key, batch) memory equal to the key's batch
+    events — the same bound a batch window's per-partition sort has.
+    tests/test_stateful.py forces multi-chunk groups with
+    maxRecordsPerBatch=2 to pin this for each kernel shape.
+
+    TIME-ORDERED-BATCH CONTRACT (ADVICE r8): a fold measures each row
+    against the key's previous row IN ARRIVAL ORDER across batches,
+    so batches must be non-decreasing in event time per key for exact
+    oracle equivalence. That holds for the single availableNow drain
+    the registered keys run, and for any source that delivers per key
+    in order (e.g. a partitioned log keyed by user). The gap kernels
+    (beacon_scores, net_hops, the chain kernels, session_transitions,
+    funnel_states) SKIP a genuinely late row (timestamp behind the
+    key's high-water mark) without moving the mark, and COUNT it in
+    state; every emitted row carries that cumulative ``late_count``,
+    and the registered keys' oracles pin it to 0 — so the contract
+    is hash-checked, not only documented. Their state
+    initialization rides on the state's existence, NOT a timestamp
+    sentinel (code review: a -1 sentinel misclassifies pre-epoch
+    events as late and drops them)."""
+
+    def fn(key, pdfs, state):
+        import pandas as pd
+
+        chunks = [c for c in pdfs if len(c)]
+        if not chunks:
+            return
+        pdf = (
+            pd.concat(chunks, ignore_index=True)
+            if len(chunks) > 1
+            else chunks[0]
+        )
+        new_state, out = step(
+            key, pdf.sort_values(order), state.get if state.exists else None
+        )
+        state.update(new_state)
+        if out is not None:
+            yield out
+
+    return (
+        events.select(*cols)
+        .groupBy(*keys)
+        .applyInPandasWithState(
+            fn,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+
 
 RUNNING_TOTAL_SCHEMA = (
     "user_id long, event_id long, ts timestamp, running_total double"
@@ -30,51 +116,37 @@ def running_total(events: DataFrame) -> DataFrame:
     """Per-user cumulative sum of `value`, one output row per event —
     the streaming twin of queries/events.py::stateful_running_total.
 
-    Within a microbatch rows are ordered by (ts, event_id); the
-    carried state seeds the next batch. The accumulator is integer
-    CENTS (value has 2 decimals), the same exact arithmetic as the
-    batch twin's DECIMAL(12,2) sum — so the emitted totals are
-    order-independent and hash-match the SQL window-cumsum oracle
-    exactly, not just approximately.
+    Rows fold in (ts, event_id) order (_ordered_fold); the carried
+    state seeds the next batch. The accumulator is integer CENTS
+    (value has 2 decimals), the same exact arithmetic as the batch
+    twin's DECIMAL(12,2) sum — so the emitted totals hash-match the
+    SQL window-cumsum oracle exactly, not just approximately.
     """
 
-    def fn(key, pdfs, state):
+    def step(key, pdf, st):
         import pandas as pd
 
-        total_cents, _n = state.get if state.exists else (0, 0)
-        outs = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            cents = (pdf["value"] * 100).round().astype("int64")
-            run_cents = cents.cumsum() + total_cents
-            if len(run_cents):
-                total_cents = int(run_cents.iloc[-1])
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "user_id": pdf["user_id"],
-                        "event_id": pdf["event_id"],
-                        "ts": pdf["ts"],
-                        "running_total": run_cents / 100.0,
-                    }
-                )
-            )
-        n_out = sum(len(o) for o in outs)
-        state.update(
-            (total_cents, (state.get[1] if state.exists else 0) + n_out)
+        total_cents, n = st if st is not None else (0, 0)
+        cents = (pdf["value"] * 100).round().astype("int64")
+        run_cents = cents.cumsum() + total_cents
+        out = pd.DataFrame(
+            {
+                "user_id": pdf["user_id"],
+                "event_id": pdf["event_id"],
+                "ts": pdf["ts"],
+                "running_total": run_cents / 100.0,
+            }
         )
-        yield from outs
+        return (int(run_cents.iloc[-1]), n + len(pdf)), out
 
-    return (
-        events.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=RUNNING_TOTAL_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _ordered_fold(
+        events,
+        ["user_id", "event_id", "ts", "value"],
+        ["user_id"],
+        ["ts", "event_id"],
+        step,
+        RUNNING_TOTAL_SCHEMA,
+        _STATE_SCHEMA,
     )
 
 
@@ -91,50 +163,43 @@ def session_totals(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     express (e.g. value-dependent gaps). Emits a row per CLOSED
     session; the final open session per key stays in state (bounded
     drains surface it on the next batch or never — at-least-once
-    session emission, documented behavior). Totals accumulate in
-    integer cents (exact, order-independent), so closed sessions
-    hash-match the batch gaps-and-islands oracle."""
+    session emission, documented behavior). Rows fold in
+    (ts, event_id) order (_ordered_fold); totals accumulate in
+    integer cents (exact), so closed sessions hash-match the batch
+    gaps-and-islands oracle."""
 
-    def fn(key, pdfs, state):
+    def step(key, pdf, st):
         import pandas as pd
 
         US = 1_000_000
-        if state.exists:
-            start, last, n, total_cents = state.get
-        else:
-            start = last = -1
-            n, total_cents = 0, 0
+        start, last, n, total_cents = st if st is not None else (-1, -1, 0, 0)
         closed = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for ts, val in zip(pdf["ts"], pdf["value"]):
-                t = int(ts.value // 1000)  # pandas ns → µs
-                cents = int(round(float(val) * 100))
-                if start < 0:
-                    start, last, n, total_cents = t, t, 1, cents
-                elif t - last >= gap_seconds * US:
-                    closed.append((key[0], start, n, total_cents / 100.0))
-                    start, last, n, total_cents = t, t, 1, cents
-                else:
-                    last, n, total_cents = t, n + 1, total_cents + cents
-        state.update((start, last, n, total_cents))
+        for ts, val in zip(pdf["ts"], pdf["value"]):
+            t = int(ts.value // 1000)  # pandas ns → µs
+            cents = int(round(float(val) * 100))
+            if start < 0:
+                start, last, n, total_cents = t, t, 1, cents
+            elif t - last >= gap_seconds * US:
+                closed.append((key[0], start, n, total_cents / 100.0))
+                start, last, n, total_cents = t, t, 1, cents
+            else:
+                last, n, total_cents = t, n + 1, total_cents + cents
+        out = None
         if closed:
             out = pd.DataFrame(
                 closed, columns=["user_id", "session_start", "n_events", "total_value"]
             )
             out["session_start"] = pd.to_datetime(out["session_start"], unit="us")
-            yield out
+        return (start, last, n, total_cents), out
 
-    return (
-        events.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SESSION_AGG_SCHEMA,
-            stateStructType=_SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _ordered_fold(
+        events,
+        ["user_id", "event_id", "ts", "value"],
+        ["user_id"],
+        ["ts", "event_id"],
+        step,
+        SESSION_AGG_SCHEMA,
+        _SESSION_STATE_SCHEMA,
     )
 
 
@@ -236,60 +301,31 @@ def rate_limited(
     frame's peer semantics, which is what makes the bounded drain
     hash-match the batch oracle.
 
-    TIME-ORDERED-BATCH ASSUMPTION (ADVICE r8): state is evicted at
+    Time-ordered-batch contract (_ordered_fold): state is evicted at
     horizon = max(batch times) − window, so an event arriving in a
     LATER microbatch with a timestamp older than an earlier batch's
-    horizon counts against already-evicted peers — it undercounts
-    versus the batch RANGE oracle. Batches must be non-decreasing in
-    event time per key for exact oracle equivalence; that holds for
-    the single availableNow drain the registered key runs, and for
-    any source that delivers per-key in order (e.g. a partitioned
-    log keyed by user). Under genuinely late data the result is a
-    conservative undercount of n_in_window (never an overcount —
-    evicted peers can only lower the count), i.e. the limiter may
-    under-flag stragglers but never false-positives. The property
-    test (test_stateful.py) pins the in-order contract across random
-    batch splits.
+    horizon counts against already-evicted peers. Under genuinely
+    late data the result is a conservative undercount of n_in_window
+    (never an overcount — evicted peers can only lower the count),
+    i.e. the limiter may under-flag stragglers but never
+    false-positives. The property test (test_stateful.py) pins the
+    in-order contract across random batch splits."""
 
-    The group's chunks are MATERIALIZED before processing: Spark
-    hands a hot key's microbatch to ``fn`` as multiple Arrow chunks
-    (maxRecordsPerBatch, default 10k) in no particular time order —
-    per-chunk processing would both miss cross-chunk in-window events
-    and evict state a later chunk still needs. Concat-then-sort costs
-    per-(key, batch) memory equal to that key's batch events — the
-    same bound the batch RANGE window's per-partition sort has, and
-    exactly the key the limiter exists to flag.
-    tests/test_stateful.py forces multi-chunk groups with
-    maxRecordsPerBatch=2 to pin this."""
-
-    def fn(key, pdfs, state):
+    def step(key, pdf, st):
         from bisect import bisect_left, bisect_right
 
         import pandas as pd
 
-        times = list(state.get[0]) if state.exists else []
-        chunks = [c for c in pdfs if len(c)]
-        if not chunks:
-            state.update((times,))
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        pdf = pdf.sort_values(["us", "event_id"])
+        times = list(st[0]) if st is not None else []
         batch_times = [int(t) for t in pdf["us"]]
         all_times = sorted(times + batch_times)
         counts = [
             bisect_right(all_times, t) - bisect_left(all_times, t - window_us)
             for t in batch_times
         ]
-        times = all_times
-        horizon = times[-1] - window_us
-        times = [t for t in times if t >= horizon]
-        state.update((times,))
+        horizon = all_times[-1] - window_us
         n = pd.Series(counts, index=pdf.index, dtype="int64")
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "event_id": pdf["event_id"],
                 "user_id": pdf["user_id"],
@@ -299,24 +335,16 @@ def rate_limited(
                 "is_limited": n > limit,
             }
         )
+        return ([t for t in all_times if t >= horizon],), out
 
-    from pyspark.sql import functions as F
-
-    return (
-        events.select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.unix_micros("ts").alias("us"),
-        )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=RATE_LIMIT_SCHEMA,
-            stateStructType=_RATE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _ordered_fold(
+        events,
+        ["event_id", "user_id", "event_type", F.unix_micros("ts").alias("us")],
+        ["user_id"],
+        ["us", "event_id"],
+        step,
+        RATE_LIMIT_SCHEMA,
+        _RATE_STATE_SCHEMA,
     )
 
 
@@ -361,66 +389,24 @@ def beacon_scores(
     (large gaps squared; ADVICE r9), where the batch twin's
     DECIMAL(38,0) absorbs the same quantity.
 
-    TIME-ORDERED-BATCH ASSUMPTION (same contract as rate_limited,
-    ADVICE r8): each gap is measured against the key's previous
-    event IN ARRIVAL ORDER — batches must be non-decreasing in event
-    time per key for exact oracle equivalence, which holds for the
-    single availableNow drain the registered key runs. A genuinely
-    late event (timestamp behind the key's high-water mark) is
-    EXCLUDED from the gap sequence and does not move the mark — a
+    Time-ordered-batch contract and late-row guard: _ordered_fold. A
     negative "gap" folded into Σd/Σd² would corrupt the key's stats
-    permanently, which is strictly worse than missing one gap. The
-    exclusion is OBSERVABLE, not silent (the banked r9 late-row
-    observability item): every emitted row carries ``late_count``,
-    the key's cumulative count of excluded late rows, so an operator
-    sees contract violations in the output stream itself — and the
-    registered key's oracle pins the column to 0, turning "the guard
-    never fires inside the contract" from a docstring claim into a
-    driver-checked invariant. Chunks are materialized
-    concat-then-sort like rate_limited (a hot key's microbatch
-    arrives as multiple Arrow chunks in no particular order)."""
+    permanently, which is strictly worse than missing one gap."""
 
-    def fn(key, pdfs, state):
+    def step(key, pdf, st):
         import pandas as pd
 
-        # initialization rides on state.exists, NOT a timestamp
-        # sentinel (code review: a -1 sentinel misclassifies
-        # pre-epoch events as late and drops them)
-        has_last = state.exists
+        has_last = st is not None
         if has_last:
-            last_us, n, sd, sd2_hi, sd2_lo, late = (
-                int(x) for x in state.get
-            )
+            last_us, n, sd, sd2_hi, sd2_lo, late = (int(x) for x in st)
             sd2 = (sd2_hi << _SD2_RADIX_BITS) | sd2_lo
         else:
             last_us, n, sd, sd2, late = 0, 0, 0, 0, 0
-
-        def pack():
-            return (
-                last_us,
-                n,
-                sd,
-                sd2 >> _SD2_RADIX_BITS,
-                sd2 & _SD2_LO_MASK,
-                late,
-            )
-
-        chunks = [c for c in pdfs if len(c)]
-        if not chunks:
-            if has_last:
-                state.update(pack())
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        pdf = pdf.sort_values(["us", "event_id"])
         rows = []
         for eid, t in zip(pdf["event_id"], pdf["us"]):
             t = int(t)
             if has_last and t < last_us:
-                late += 1  # excluded AND counted: see docstring guard
+                late += 1  # excluded AND counted: see the shell's guard
                 continue
             if has_last:
                 d = (t - last_us) // 1_000_000
@@ -436,38 +422,37 @@ def beacon_scores(
                     )
             last_us = t
             has_last = True
-        state.update(pack())
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "user_id",
-                    "event_type",
-                    "event_id",
-                    "n_gaps",
-                    "period_s",
-                    "is_beacon",
-                    "late_count",
-                ],
-            )
-
-    from pyspark.sql import functions as F
-
-    return (
-        events.select(
-            "user_id",
-            "event_type",
-            "event_id",
-            F.unix_micros("ts").alias("us"),
+        new_state = (
+            last_us,
+            n,
+            sd,
+            sd2 >> _SD2_RADIX_BITS,
+            sd2 & _SD2_LO_MASK,
+            late,
         )
-        .groupBy("user_id", "event_type")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=BEACON_SCHEMA,
-            stateStructType=_BEACON_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        if not rows:
+            return new_state, None
+        return new_state, pd.DataFrame(
+            rows,
+            columns=[
+                "user_id",
+                "event_type",
+                "event_id",
+                "n_gaps",
+                "period_s",
+                "is_beacon",
+                "late_count",
+            ],
         )
+
+    return _ordered_fold(
+        events,
+        ["user_id", "event_type", "event_id", F.unix_micros("ts").alias("us")],
+        ["user_id", "event_type"],
+        ["us", "event_id"],
+        step,
+        BEACON_SCHEMA,
+        _BEACON_STATE_SCHEMA,
     )
 
 
@@ -489,48 +474,25 @@ def net_hops(events: DataFrame, window_us: int) -> DataFrame:
     itself is stateless map-side work that needs no state store.
 
     State is (last_net, last_us, late) per user — three scalars, O(1)
-    regardless of volume. Inherits the time-ordered-batch contract
-    (rate_limited docstring): hops are measured against the previous
-    event in arrival order; exact for the single availableNow drain
-    and any per-key in-order source. A genuinely late event
-    (timestamp behind the key's high-water mark) is skipped and does
-    not move the mark — without the guard its negative "gap" would
-    trivially satisfy ``<= window_us`` and emit a spurious hop.
-    Inside the contract the guard never fires — and the exclusion is
-    OBSERVABLE, not silent (the beacon_scores pattern, VERDICT r9
-    item 6): every emitted hop carries ``late_count``, the user's
-    cumulative excluded-late-row count, so the registered key's
-    rollup can pin the contract in its oracle. Chunks are
-    materialized concat-then-sort like the other kernels."""
+    regardless of volume. Time-ordered-batch contract and late-row
+    guard: _ordered_fold; without the guard a late row's negative
+    "gap" would trivially satisfy ``<= window_us`` and emit a
+    spurious hop."""
 
-    def fn(key, pdfs, state):
+    def step(key, pdf, st):
         import pandas as pd
 
-        # initialization rides on state.exists, NOT a timestamp
-        # sentinel (code review: a -1 sentinel misclassifies
-        # pre-epoch events as late and drops them)
-        has_last = state.exists
+        has_last = st is not None
         if has_last:
-            last_net, last_us, late = state.get
+            last_net, last_us, late = st
             last_us, late = int(last_us), int(late)
         else:
             last_net, last_us, late = None, 0, 0
-        chunks = [c for c in pdfs if len(c)]
-        if not chunks:
-            if has_last:
-                state.update((last_net, last_us, late))
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        pdf = pdf.sort_values(["us", "event_id"])
         rows = []
         for eid, t, net in zip(pdf["event_id"], pdf["us"], pdf["net"]):
             t = int(t)
             if has_last and t < last_us:
-                late += 1  # excluded AND counted: see docstring guard
+                late += 1  # excluded AND counted: see the shell's guard
                 continue
             if (
                 has_last
@@ -542,30 +504,28 @@ def net_hops(events: DataFrame, window_us: int) -> DataFrame:
                 )
             last_net, last_us = net, t
             has_last = True
-        state.update((last_net, last_us, late))
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "user_id",
-                    "event_id",
-                    "from_net",
-                    "to_net",
-                    "gap_us",
-                    "late_count",
-                ],
-            )
-
-    return (
-        events.select("user_id", "event_id", "us", "net")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=HOP_SCHEMA,
-            stateStructType=_HOP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        if not rows:
+            return (last_net, last_us, late), None
+        return (last_net, last_us, late), pd.DataFrame(
+            rows,
+            columns=[
+                "user_id",
+                "event_id",
+                "from_net",
+                "to_net",
+                "gap_us",
+                "late_count",
+            ],
         )
+
+    return _ordered_fold(
+        events,
+        ["user_id", "event_id", "us", "net"],
+        ["user_id"],
+        ["us", "event_id"],
+        step,
+        HOP_SCHEMA,
+        _HOP_STATE_SCHEMA,
     )
 
 
@@ -577,10 +537,7 @@ def _net_hop_chain_kernel(
 ) -> DataFrame:
     """ONE n-slot chain kernel behind both lateral-movement twins
     (n_slots = remembered completed hops: 1 → A→B→C rows, 2 →
-    A→B→C→D) — a single copy of the time-ordered-batch contract
-    (restore, concat-then-sort, late skip+count, emit-then-shift)
-    instead of two hand-synced kernels (code review r11; the
-    _NORM_SQL discipline applied to kernel scaffolding).
+    A→B→C→D) instead of two hand-synced kernels (code review r11).
 
     Per user the state is ``n_slots`` (origin, landing, start) hop
     slots + the last (net, timestamp) + the late counter — O(1) at
@@ -590,9 +547,8 @@ def _net_hop_chain_kernel(
     the net the previous landed on — an off-window drift in between
     changes last_net without touching the slots, so continuity fails
     exactly where the batch filters do), and span-bounded; the chain
-    row emits at arrival. A genuinely late event is SKIPPED, counted,
-    and surfaced on every emitted chain (late_count — the registered
-    keys' oracles pin it to 0)."""
+    row emits at arrival. Time-ordered-batch contract and late-row
+    guard: _ordered_fold."""
     net_cols = ["net_a", "net_b", "net_c", "net_d"][: n_slots + 2]
     out_schema = (
         "user_id long, event_id long, "
@@ -607,12 +563,12 @@ def _net_hop_chain_kernel(
         + ", last_net string, last_us long, late long"
     )
 
-    def fn(key, pdfs, state):
+    def step(key, pdf, st):
         import pandas as pd
 
-        has_last = state.exists
+        has_last = st is not None
         if has_last:
-            vals = list(state.get)
+            vals = list(st)
             slots = []
             for i in range(n_slots):
                 f_, t_, s_ = vals[3 * i : 3 * i + 3]
@@ -623,29 +579,11 @@ def _net_hop_chain_kernel(
             slots = [None] * n_slots
             last_net = None
             last_us, late = 0, 0
-
-        def packed():
-            out = []
-            for h in slots:
-                out += [h[0], h[1], h[2]] if h else [None, None, 0]
-            return tuple(out) + (last_net, last_us, late)
-
-        chunks = [c for c in pdfs if len(c)]
-        if not chunks:
-            if has_last:
-                state.update(packed())
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        pdf = pdf.sort_values(["us", "event_id"])
         rows = []
         for eid, t, net in zip(pdf["event_id"], pdf["us"], pdf["net"]):
             t = int(t)
             if has_last and t < last_us:
-                late += 1  # excluded AND counted: see docstring guard
+                late += 1  # excluded AND counted: see the shell's guard
                 continue
             if (
                 has_last
@@ -671,24 +609,26 @@ def _net_hop_chain_kernel(
                 slots = slots[1:] + [new_hop]
             last_net, last_us = net, t
             has_last = True
-        state.update(packed())
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=["user_id", "event_id", *net_cols,
-                         "span_us", "late_count"],
-            )
-
-    return (
-        events.select("user_id", "event_id", "us", "net")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        packed = []
+        for h in slots:
+            packed += [h[0], h[1], h[2]] if h else [None, None, 0]
+        new_state = tuple(packed) + (last_net, last_us, late)
+        if not rows:
+            return new_state, None
+        return new_state, pd.DataFrame(
+            rows,
+            columns=["user_id", "event_id", *net_cols,
+                     "span_us", "late_count"],
         )
+
+    return _ordered_fold(
+        events,
+        ["user_id", "event_id", "us", "net"],
+        ["user_id"],
+        ["us", "event_id"],
+        step,
+        out_schema,
+        state_schema,
     )
 
 
@@ -742,30 +682,17 @@ def session_transitions(events: DataFrame, gap_us: int) -> DataFrame:
 
     State is two int64s + the last event type per user — O(1) per
     key regardless of volume, the minimum ANY sessionizer must hold.
-    Inherits the time-ordered-batch contract (rate_limited
-    docstring): session boundaries are gap tests against the previous
-    event in arrival order; exact for the single availableNow drain
-    the registered key runs. A genuinely late event (timestamp behind
-    the key's high-water mark) is SKIPPED and does not move the mark
-    — folding it in would measure a negative gap and could both miss
-    a boundary and fabricate a transition the batch form never saw.
-    Inside the contract the guard never fires — and the exclusion is
-    OBSERVABLE, not silent (the beacon_scores pattern, VERDICT r9
-    item 6): every emitted transition carries ``late_count``, the
-    user's cumulative excluded-late-row count, so the registered
-    key can pin the contract per session in its oracle. Chunks are
-    materialized concat-then-sort like the other kernels (a hot key's
-    microbatch arrives as multiple Arrow chunks in no order)."""
+    Time-ordered-batch contract and late-row guard: _ordered_fold;
+    folding a late row in would measure a negative gap and could both
+    miss a boundary and fabricate a transition the batch form never
+    saw."""
 
-    def fn(key, pdfs, state):
+    def step(key, pdf, st):
         import pandas as pd
 
-        # initialization rides on state.exists, NOT a timestamp
-        # sentinel (code review: a -1 sentinel misclassifies
-        # pre-epoch events as late and drops them)
-        has_last = state.exists
+        has_last = st is not None
         if has_last:
-            session_idx, last_us, last_type, late = state.get
+            session_idx, last_us, last_type, late = st
             session_idx, last_us, late = (
                 int(session_idx),
                 int(last_us),
@@ -773,22 +700,11 @@ def session_transitions(events: DataFrame, gap_us: int) -> DataFrame:
             )
         else:
             session_idx, last_us, last_type, late = 0, 0, None, 0
-        chunks = [c for c in pdfs if len(c)]
-        if not chunks:
-            if has_last:
-                state.update((session_idx, last_us, last_type, late))
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        pdf = pdf.sort_values(["us", "event_id"])
         rows = []
         for t, typ in zip(pdf["us"], pdf["event_type"]):
             t = int(t)
             if has_last and t < last_us:
-                late += 1  # excluded AND counted: see docstring guard
+                late += 1  # excluded AND counted: see the shell's guard
                 continue
             if not has_last or t - last_us > gap_us:
                 session_idx += 1
@@ -796,29 +712,28 @@ def session_transitions(events: DataFrame, gap_us: int) -> DataFrame:
                 rows.append((key[0], session_idx, last_type, typ, late))
             last_us, last_type = t, typ
             has_last = True
-        state.update((session_idx, last_us, last_type, late))
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "user_id",
-                    "session_idx",
-                    "from_type",
-                    "to_type",
-                    "late_count",
-                ],
-            )
-
-    return (
-        events.select("user_id", "event_id", "event_type", "us")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=TRANSITION_SCHEMA,
-            stateStructType=_SESSION_TR_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        new_state = (session_idx, last_us, last_type, late)
+        if not rows:
+            return new_state, None
+        return new_state, pd.DataFrame(
+            rows,
+            columns=[
+                "user_id",
+                "session_idx",
+                "from_type",
+                "to_type",
+                "late_count",
+            ],
         )
+
+    return _ordered_fold(
+        events,
+        ["user_id", "event_id", "event_type", "us"],
+        ["user_id"],
+        ["us", "event_id"],
+        step,
+        TRANSITION_SCHEMA,
+        _SESSION_TR_STATE_SCHEMA,
     )
 
 
@@ -853,42 +768,26 @@ def funnel_states(events: DataFrame) -> DataFrame:
     as the batch form). State is four int64s + the late counter —
     O(1) per user, never the event list.
 
-    Inherits the time-ordered-batch contract (rate_limited
-    docstring): a genuinely late event (behind the user's high-water
-    mark) is SKIPPED — folded in, a late early view could not rewind
-    t_view anyway (slots are write-once), so skipping keeps the state
-    consistent rather than half-applying it — and COUNTED in the
-    state's late counter, which rides on every emitted row
-    (beacon_scores' observability pattern). Inside the contract the
-    guard never fires. Chunks are concat-then-sorted like the other
-    kernels."""
+    Time-ordered-batch contract and late-row guard: _ordered_fold —
+    folded in, a late early view could not rewind t_view anyway
+    (slots are write-once), so skipping keeps the state consistent
+    rather than half-applying it."""
 
-    def fn(key, pdfs, state):
+    def step(key, pdf, st):
         import pandas as pd
 
-        has = state.exists
+        has = st is not None
         if has:
-            tv, tc, tp, last_us, late = state.get
+            tv, tc, tp, last_us, late = st
             last_us = int(last_us)
             late = int(late)
         else:
             tv, tc, tp, last_us, late = None, None, None, 0, 0
-        chunks = [c for c in pdfs if len(c)]
-        if not chunks:
-            if has:
-                state.update((tv, tc, tp, last_us, late))
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        pdf = pdf.sort_values(["us", "event_id"])
         rows = []
         for t, typ in zip(pdf["us"], pdf["event_type"]):
             t = int(t)
             if has and t < last_us:
-                late += 1  # excluded AND counted: see docstring
+                late += 1  # excluded AND counted: see the shell's guard
                 continue
             changed = False
             if typ == "view" and tv is None:
@@ -912,30 +811,29 @@ def funnel_states(events: DataFrame) -> DataFrame:
                 rows.append((key[0], tv, tc, tp, stage, late))
             last_us = t
             has = True
-        state.update((tv, tc, tp, last_us, late))
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "user_id",
-                    "t_view",
-                    "t_click",
-                    "t_purchase",
-                    "stage",
-                    "late_count",
-                ],
-            )
-
-    return (
-        events.select("user_id", "event_id", "event_type", "us")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=FUNNEL_OUT_SCHEMA,
-            stateStructType=FUNNEL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        new_state = (tv, tc, tp, last_us, late)
+        if not rows:
+            return new_state, None
+        return new_state, pd.DataFrame(
+            rows,
+            columns=[
+                "user_id",
+                "t_view",
+                "t_click",
+                "t_purchase",
+                "stage",
+                "late_count",
+            ],
         )
+
+    return _ordered_fold(
+        events,
+        ["user_id", "event_id", "event_type", "us"],
+        ["user_id"],
+        ["us", "event_id"],
+        step,
+        FUNNEL_OUT_SCHEMA,
+        FUNNEL_STATE_SCHEMA,
     )
 
 
@@ -1010,8 +908,8 @@ def bottom_k_sample(events: DataFrame, k: int) -> DataFrame:
             # the batch changed nothing (empty chunks, pure
             # redelivery, or only rows hashing outside the sample):
             # no snapshot — emissions track sample CHURN, not batch
-            # count, so a saturated group goes quiet at scale
-            state.update(state.get)
+            # count, so a saturated group goes quiet at scale (with
+            # NoTimeout the stored state persists without an update)
             return
         seq += 1
         state.update(

@@ -2,33 +2,20 @@
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kawa_spark.io import stream_table, table
+from kawa_spark.queries.streaming_mode import _drain
 from kawa_spark.streaming.stateful import running_total, session_totals
 
 SF = "/root/testdata/sf0.001"
 
 
-def _drain(df, name, timeout=180):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout)
-
-
 def test_running_total_matches_batch(spark):
-    name = f"rt_{uuid.uuid4().hex[:8]}"
-    _drain(running_total(stream_table(spark, SF, "events")), name)
+    out = _drain(running_total(stream_table(spark, SF, "events")), spark)
     got = {
-        r["event_id"]: r["running_total"] for r in spark.table(name).collect()
+        r["event_id"]: r["running_total"] for r in out.collect()
     }
     w = (
         Window.partitionBy("user_id")
@@ -46,11 +33,10 @@ def test_running_total_matches_batch(spark):
 
 
 def test_session_totals_subset_of_batch_sessions(spark):
-    name = f"st_{uuid.uuid4().hex[:8]}"
-    _drain(session_totals(stream_table(spark, SF, "events")), name)
+    out = _drain(session_totals(stream_table(spark, SF, "events")), spark)
     got = {
         (r["user_id"], r["session_start"]): (r["n_events"], round(r["total_value"], 4))
-        for r in spark.table(name).collect()
+        for r in out.collect()
     }
     batch = (
         table(spark, SF, "events")
@@ -107,11 +93,10 @@ def test_rate_limited_state_carries_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    name = f"rl_{uuid.uuid4().hex[:8]}"
-    _drain(rate_limited(stream, W, 2), name)
+    out = _drain(rate_limited(stream, W, 2), spark)
     got = {
         r["event_id"]: (r["n_in_window"], r["is_limited"])
-        for r in spark.table(name).collect()
+        for r in out.collect()
     }
     assert len(got) == 6
     assert got[1] == (1, False)
@@ -125,38 +110,66 @@ def test_rate_limited_state_carries_across_batches(spark, tmp_path):
 
 def test_rate_limited_hot_key_spans_arrow_chunks(spark, tmp_path):
     """A group larger than arrow maxRecordsPerBatch arrives at the
-    state function as MULTIPLE chunks in arbitrary time order; the
-    limiter must still count across all of them (code review r8: the
-    per-chunk form missed cross-chunk in-window events and evicted
-    state later chunks needed). maxRecordsPerBatch=2 forces chunking
-    at 10 events."""
+    state function as MULTIPLE chunks in arbitrary time order; every
+    ordered-fold kernel must fold across all of them in time order
+    (code review r8: the per-chunk rate limiter missed cross-chunk
+    in-window events and evicted state later chunks needed; the
+    per-chunk sort in running_total and session_totals folded a hot
+    key out of order). The rows are written in REVERSE time order and
+    maxRecordsPerBatch=2 forces five chunks for the one key."""
     import pandas as pd
 
+    from kawa_spark.session import scoped_conf
     from kawa_spark.streaming.stateful import rate_limited
 
-    W = 1_000_000 * 100  # 100 s window
-    rows = [(i, 1, i * 10_000_000) for i in range(10)]  # every 10 s
+    S = 1_000_000
+    secs = [0, 10, 20, 50, 60, 100, 110, 120, 130, 200]
     src = tmp_path / "src"
-    schema = "event_id long, user_id long, event_type string, ts timestamp"
+    schema = (
+        "event_id long, user_id long, event_type string, ts timestamp, "
+        "value double"
+    )
     pdf = pd.DataFrame(
-        [(e, u, "x", pd.Timestamp(t, unit="us")) for e, u, t in rows],
-        columns=["event_id", "user_id", "event_type", "ts"],
+        [
+            (i, 1, "x", pd.Timestamp(t * S, unit="us"), float(i + 1))
+            for i, t in enumerate(secs)
+        ][::-1],
+        columns=["event_id", "user_id", "event_type", "ts", "value"],
     )
     spark.createDataFrame(pdf, schema).coalesce(1).write.parquet(str(src))
-    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
-    try:
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        name = f"rlc_{uuid.uuid4().hex[:8]}"
-        _drain(rate_limited(stream, W, 3), name)
-        got = {
-            r["event_id"]: r["n_in_window"]
-            for r in spark.table(name).collect()
-        }
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-    # all 10 events are within 100 s of each other → event i sees i+1
-    assert got == {i: i + 1 for i in range(10)}, got
+    cases = {
+        # 100 s window: event i sees every event in [t_i - 100 s, t_i]
+        "rate_limited": (
+            lambda st: rate_limited(st, 100 * S, 3).select(
+                "event_id", "n_in_window"
+            ),
+            {
+                i: sum(t - 100 <= u <= t for u in secs)
+                for i, t in enumerate(secs)
+            },
+        ),
+        # value = event_id + 1, so the running sum is triangular
+        "running_total": (
+            lambda st: running_total(st).select("event_id", "running_total"),
+            {i: (i + 1) * (i + 2) / 2 for i in range(len(secs))},
+        ),
+        # 25 s gap: closed sessions start at 0 s, 50 s and 100 s (keyed
+        # by start second → (n_events, total_value)); 200 s stays open
+        "session_totals": (
+            lambda st: session_totals(st, gap_seconds=25).select(
+                (F.unix_micros("session_start") / S).cast("long"),
+                F.struct("n_events", "total_value"),
+            ),
+            {0: (3, 6.0), 50: (2, 9.0), 100: (4, 30.0)},
+        ),
+    }
+    with scoped_conf(
+        spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "2"}
+    ):
+        for kernel, (build, want) in cases.items():
+            stream = spark.readStream.schema(schema).parquet(str(src))
+            got = dict(_drain(build(stream), spark).collect())
+            assert got == want, (kernel, got)
 
 
 def test_beacon_scores_state_carries_across_batches(spark, tmp_path):
@@ -190,11 +203,12 @@ def test_beacon_scores_state_carries_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    name = f"bs_{uuid.uuid4().hex[:8]}"
-    _drain(beacon_scores(stream, min_gaps=3, cv2_num=1, cv2_den=4), name)
+    out = _drain(
+        beacon_scores(stream, min_gaps=3, cv2_num=1, cv2_den=4), spark
+    )
     got = {
         r["event_id"]: (r["n_gaps"], r["period_s"], r["is_beacon"])
-        for r in spark.table(name).collect()
+        for r in out.collect()
     }
     # eid 4 closes gap 3 (10,10,10): variance 0 -> beacon
     # eid 5 is batch 2's first event: n=4 REQUIRES batch 1's state
@@ -240,11 +254,10 @@ def test_net_hops_state_carries_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    name = f"nh_{uuid.uuid4().hex[:8]}"
-    _drain(net_hops(stream, 1800 * M), name)
+    out = _drain(net_hops(stream, 1800 * M), spark)
     got = [
         (r["user_id"], r["event_id"], r["from_net"], r["to_net"], r["gap_us"])
-        for r in spark.table(name).collect()
+        for r in out.collect()
     ]
     assert got == [(1, 3, "net_a", "net_b", 120 * M)]
 
@@ -280,8 +293,9 @@ def test_late_rows_do_not_corrupt_gap_kernels(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    name = f"lb_{uuid.uuid4().hex[:8]}"
-    _drain(beacon_scores(stream, min_gaps=2, cv2_num=1, cv2_den=4), name)
+    out = _drain(
+        beacon_scores(stream, min_gaps=2, cv2_num=1, cv2_den=4), spark
+    )
     got = {
         r["event_id"]: (
             r["n_gaps"],
@@ -289,7 +303,7 @@ def test_late_rows_do_not_corrupt_gap_kernels(spark, tmp_path):
             r["is_beacon"],
             r["late_count"],
         )
-        for r in spark.table(name).collect()
+        for r in out.collect()
     }
     # the late eid 4 is absent AND eid 5's stats see gaps 10,10,10
     # (20 s -> 30 s), untouched by the late row — but the exclusion
@@ -314,11 +328,10 @@ def test_late_rows_do_not_corrupt_gap_kernels(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src2))
     )
-    name2 = f"lh_{uuid.uuid4().hex[:8]}"
-    _drain(net_hops(stream2, 1800 * S), name2)
+    out2 = _drain(net_hops(stream2, 1800 * S), spark)
     got2 = [
         (r["event_id"], r["from_net"], r["to_net"], r["late_count"])
-        for r in spark.table(name2).collect()
+        for r in out2.collect()
     ]
     # the late eid 3 emitted NO hop (a negative gap would trivially
     # pass the window test) — and the exclusion is observable: the
@@ -357,11 +370,10 @@ def test_session_transitions_state_carries_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    name = f"st_{uuid.uuid4().hex[:8]}"
-    _drain(session_transitions(stream, GAP), name)
+    out = _drain(session_transitions(stream, GAP), spark)
     got = sorted(
         (r["user_id"], r["session_idx"], r["from_type"], r["to_type"])
-        for r in spark.table(name).collect()
+        for r in out.collect()
     )
     assert got == [(1, 1, "click", "buy"), (1, 1, "view", "click")]
 
@@ -394,8 +406,7 @@ def test_session_transitions_skips_late_rows(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    name = f"sl_{uuid.uuid4().hex[:8]}"
-    _drain(session_transitions(stream, GAP), name)
+    out = _drain(session_transitions(stream, GAP), spark)
     got = sorted(
         (
             r["user_id"],
@@ -404,7 +415,7 @@ def test_session_transitions_skips_late_rows(spark, tmp_path):
             r["to_type"],
             r["late_count"],
         )
-        for r in spark.table(name).collect()
+        for r in out.collect()
     )
     # the late "buy" is absent; "pay" transitions from "click" — and
     # the exclusion is observable: the post-violation transition
@@ -449,8 +460,7 @@ def test_funnel_states_carry_and_late_count(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    name = f"fc_{uuid.uuid4().hex[:8]}"
-    _drain(funnel_states(stream), name)
+    out = _drain(funnel_states(stream), spark)
     got = sorted(
         (
             r["stage"],
@@ -459,7 +469,7 @@ def test_funnel_states_carry_and_late_count(spark, tmp_path):
             r["t_purchase"],
             r["late_count"],
         )
-        for r in spark.table(name).collect()
+        for r in out.collect()
     )
     # emissions: stage 1 (view@10), stage 2 (click@30, late=1 by
     # then), stage 3 (purchase@40). The batch-1 purchase@20 cannot

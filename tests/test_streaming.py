@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kawa_spark.io import table
+from kawa_spark.queries.streaming_mode import _drain
 from kawa_spark.streaming.listener import Watchdog
 
 SF = "/root/testdata/sf0.001"
@@ -28,30 +29,17 @@ def events_stream(spark):
     return make
 
 
-def _drain(df, name, mode="complete", timeout=120):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout)
-    return q
-
-
 def test_stream_tumbling_matches_batch(spark, events_stream):
-    name = f"tmb_{uuid.uuid4().hex[:8]}"
     agg = (
         events_stream()
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
-    _drain(agg, name)
+    out = _drain(agg, spark, mode="complete")
     got = {
         (r["window_start"], r["event_type"]): r["n_events"]
-        for r in spark.table(name).collect()
+        for r in out.collect()
     }
     batch = (
         table(spark, SF, "events")
@@ -68,7 +56,6 @@ def test_stream_tumbling_matches_batch(spark, events_stream):
 def test_stream_watermark_dedup(spark, events_stream):
     """dropDuplicates on the stream with a watermark: event_ids unique
     ⇒ row count preserved; duplicated input ⇒ deduped."""
-    name = f"ddp_{uuid.uuid4().hex[:8]}"
     src = events_stream()
     doubled = src.unionByName(src)  # every event twice
     dedup = (
@@ -76,14 +63,13 @@ def test_stream_watermark_dedup(spark, events_stream):
         .dropDuplicates(["event_id"])
         .select("event_id")
     )
-    _drain(dedup, name, mode="append")
-    n = spark.table(name).count()
+    out = _drain(dedup, spark, mode="append")
+    n = out.count()
     assert n == table(spark, SF, "events").count()
 
 
 def test_stream_session_window_runs(spark, events_stream):
     """session_window executes incrementally with a watermark."""
-    name = f"ssn_{uuid.uuid4().hex[:8]}"
     agg = (
         events_stream()
         .withWatermark("ts", "2 hours")
@@ -91,13 +77,13 @@ def test_stream_session_window_runs(spark, events_stream):
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select("user_id", F.col("w.start").alias("session_start"), "n_events")
     )
-    _drain(agg, name, mode="append")
+    out = _drain(agg, spark, mode="append")
     # append mode emits only watermark-closed sessions; bounded input +
     # availableNow closes all but the tail. Compare against batch twin
     # modulo the final watermark horizon: counts must be a subset.
     got = {
         (r["user_id"], r["session_start"]): r["n_events"]
-        for r in spark.table(name).collect()
+        for r in out.collect()
     }
     batch = (
         table(spark, SF, "events")
@@ -138,9 +124,8 @@ def test_watchdog_listener(spark, events_stream):
     wd = Watchdog(stall_seconds=3600)
     spark.streams.addListener(wd)
     try:
-        name = f"wdg_{uuid.uuid4().hex[:8]}"
         agg = events_stream().groupBy("event_type").count()
-        _drain(agg, name)
+        _drain(agg, spark, mode="complete")
         assert wd.check() == set()
     finally:
         spark.streams.removeListener(wd)
@@ -187,11 +172,10 @@ def test_first_seen_min_converges_out_of_order(spark, tmp_path):
         .groupBy("user_id", "event_type")
         .agg(F.min("ts_us").alias("first_us"))
     )
-    name = f"fs_{uuid.uuid4().hex[:8]}"
-    _drain(agg, name, mode="complete")
+    out = _drain(agg, spark, mode="complete")
     pairs = {
         (r["user_id"], r["event_type"]): r["first_us"]
-        for r in spark.table(name).collect()
+        for r in out.collect()
     }
     assert pairs == {
         (1, "click"): 1 * DAY * 1_000_000,  # the LATE day-1 arrival won
@@ -202,7 +186,7 @@ def test_first_seen_min_converges_out_of_order(spark, tmp_path):
 
     curve = {
         (r["event_type"], r["day"]): (r["n_new"], r["cum_new"])
-        for r in first_seen_curve(spark.table(name)).collect()
+        for r in first_seen_curve(out).collect()
     }
     assert curve == {
         ("click", 1): (1, 1),
