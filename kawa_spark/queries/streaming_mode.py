@@ -151,6 +151,21 @@ def _await(q: StreamingQuery, what: str) -> None:
         raise TimeoutError(f"{what} did not finish within 300s")
 
 
+# Checkpoint file manager for PRIVATE checkpoints only. Without
+# Hadoop's native library the local filesystem shells out for link
+# status, so the session default (FileContext-based) renames each
+# checkpoint and state file through two spawned ``readlink``
+# processes; this manager renames with one rename(2). It is safe only
+# for a checkpoint with one writer that is never resumed
+# (docs/SCALE.md, "Bounded drains").
+_PRIVATE_CHECKPOINT = {
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+}
+
+
 def _drain(
     df: DataFrame,
     spark: SparkSession,
@@ -159,20 +174,33 @@ def _drain(
 ) -> DataFrame:
     """Bounded drain through the real streaming runtime.
 
-    ``state_partitions`` sizes the stateful shuffle for the drained
-    query (streaming queries clone the session conf at start(), and
-    the count is locked into the checkpoint at first batch — so the
-    live conf is restored as soon as start() returns; scoped_conf
-    holds its lock meanwhile, so concurrent drains cannot leave the
-    session at each other's value). The testdata drains carry
-    thousands-to-100k state rows; every extra partition is a state
-    store instance spun up per batch, which dominates wall time at
-    this scale. A production deployment with billions of keys passes
-    None (session default) or a sized value."""
+    The query's conf is scoped to start(): a streaming query clones
+    the session conf there, and the state partition count is locked
+    into the checkpoint at the first batch. scoped_conf holds its lock
+    meanwhile, so concurrent drains cannot leave the session at each
+    other's value. Two keys are scoped:
+
+    * ``state_partitions``, capped at the core count
+      (``defaultParallelism``). A drain is one-shot: a state store
+      beyond the cores buys no parallelism, yet still costs a store
+      lifecycle and its files per batch, and for a pandas-state kernel
+      one more Python task (each pays ~0.2 s of worker setup CPU).
+      The cap changes nothing on hosts with at least
+      ``state_partitions`` cores. None means the session default,
+      uncapped.
+    * The checkpoint file manager (``_PRIVATE_CHECKPOINT``). The
+      memory sink's checkpoint is a fresh temp dir with one writer
+      that is never resumed: it records no acks, and no restart ever
+      reads what a crash left in it, so its renames need not be
+      atomic on every filesystem. A durable checkpoint (RoutingSink,
+      Pipeline, the incremental rollup, any user
+      ``checkpointLocation``) is read back after a crash and keeps
+      the session default."""
     name = f"q_{uuid.uuid4().hex[:10]}"
-    conf = {}
+    conf = dict(_PRIVATE_CHECKPOINT)
     if state_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
+        cores = spark.sparkContext.defaultParallelism
+        conf["spark.sql.shuffle.partitions"] = str(min(state_partitions, cores))
     with scoped_conf(spark, conf):
         q = (
             df.writeStream.format("memory")
@@ -206,14 +234,17 @@ def _drain_files(df: DataFrame, spark: SparkSession, prefix: str) -> DataFrame:
     which matches the memory sink's same-name-requery semantics."""
     root = _plants_scratch_dir(prefix)
     shutil.rmtree(root, ignore_errors=True)
-    q = (
-        df.writeStream.format("parquet")
-        .option("path", f"{root}/data")
-        .option("checkpointLocation", f"{root}/ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    # the wiped per-process checkpoint is private: one writer, never
+    # resumed (see _drain)
+    with scoped_conf(spark, _PRIVATE_CHECKPOINT):
+        q = (
+            df.writeStream.format("parquet")
+            .option("path", f"{root}/data")
+            .option("checkpointLocation", f"{root}/ckpt")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
     _await(q, f"file drain {root}")
     if not os.path.isdir(f"{root}/data"):
         # zero committed microbatches: the parquet sink never creates
@@ -284,10 +315,11 @@ def stream_exec_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state = hours × event types (~3.6k rows at sf0.1): 2 stores
     # measured fastest (8→1.41 s, 2→1.04 s, 1→0.94 s min-of-3; 2
     # keeps a second store for skew headroom at ~the same cost). The
-    # 100k-key drains below keep the 8-store default — measured
-    # SLOWER with fewer stores (running_total 3.2→7.6 s at 1): there
-    # the per-batch state work scales with volume and wants the
-    # parallelism. Store count follows state volume, always.
+    # 100k-key drains below keep the default of 8, which _drain caps
+    # at the core count: there the per-batch state work scales with
+    # volume and wants one store per core (running_total measured
+    # 3.2→7.6 s at 1 store), but a store beyond the cores adds no
+    # parallelism. Store count follows state volume, up to the cores.
     return _drain(agg, spark, mode="complete", state_partitions=2)
 
 
@@ -491,12 +523,19 @@ def stream_exec_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     #   per-query is safe (it's locked into a checkpoint at first
     #   batch; the streaming query captures a cloned conf at start,
     #   so the scope covers start() only).
+    # The fresh mkdtemp checkpoint is also private (one writer, never
+    # resumed), so it takes the drains' checkpoint manager; a durable
+    # start_incremental_rollup keeps the session default.
     provider = (
         "org.apache.spark.sql.execution.streaming.state."
         "HDFSBackedStateStoreProvider"
     )
     with scoped_conf(
-        spark, {"spark.sql.streaming.stateStore.providerClass": provider}
+        spark,
+        {
+            **_PRIVATE_CHECKPOINT,
+            "spark.sql.streaming.stateStore.providerClass": provider,
+        },
     ):
         q = start_incremental_rollup(
             spark,
@@ -602,8 +641,9 @@ def stream_exec_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = e.groupBy("user_id", "event_type").agg(
         F.min("ts_us").alias("first_us")
     )
-    # state rows = |pairs| (~50k at sf0.1): keep the 8-store default
-    # (see the store-count note in stream_exec_tumbling).
+    # state rows = |pairs| (~50k at sf0.1): keep the default of 8,
+    # capped at the core count (see the store-count note in
+    # stream_exec_tumbling).
     p = _drain(agg, spark, mode="complete")
     return first_seen_curve(p)
 

@@ -157,5 +157,5 @@ def test_stream_failed_batch_not_committed(spark, tmp_path):
         )
     )
     q2 = p2.run_stream(spark, available_now=True, checkpoint=cp)
-    q2.awaitTermination(60)
+    assert q2.awaitTermination(60)
     assert sorted(delivered) == [f"payload-{i}" for i in range(5)]

@@ -29,7 +29,7 @@ def test_replay_source_delivers_all(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "cp"))
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.table(name).collect()
     got = [r["value"] for r in rows]
     assert sorted(got, key=lambda s: int(s.split("-")[1])) == [
@@ -63,7 +63,7 @@ def test_replay_source_tails_incrementally(spark, tmp_path):
             .option("checkpointLocation", cp)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     drain()
     assert sorted(delivered) == ["a", "b"]

@@ -43,7 +43,7 @@ def test_log_pipeline_routes_and_archives(spark, tmp_path):
 
     errors = _Collector()
     q = start_pipeline(spark, str(log), archive, cp, error_sink=errors)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     # errors routed with enrichment intact
     assert sorted(r["event"] for r in errors.rows) == ["evt-1", "evt-3"]
@@ -65,7 +65,7 @@ def test_log_pipeline_routes_and_archives(spark, tmp_path):
     _emit(log, 9, "ERROR")
     errors.rows.clear()
     q2 = start_pipeline(spark, str(log), archive, cp, error_sink=errors)
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     assert [r["event"] for r in errors.rows] == ["evt-9"]
 
 

@@ -126,7 +126,7 @@ def test_stream_table_survives_source_regeneration(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(60)
+        assert q.awaitTermination(60)
         rows = sorted(
             r["v"] for r in spark.sql(f"SELECT v FROM {qname}").collect()
         )

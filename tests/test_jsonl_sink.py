@@ -25,7 +25,7 @@ def test_jsonl_sink_writes_and_commits(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     rows = []
     for f in glob.glob(os.path.join(out, "part-*.jsonl")):

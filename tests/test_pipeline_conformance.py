@@ -71,7 +71,7 @@ def test_memory_roundtrip_stream(spark, drop_dir, tmp_path):
     q = p.run_stream(
         spark, available_now=True, checkpoint=str(tmp_path / "cp")
     )
-    q.awaitTermination(60)
+    assert q.awaitTermination(60)
     got = [r["value"] for r in spark.table(name).collect()]
     assert sorted(got) == sorted(payloads)
 
@@ -142,7 +142,7 @@ def test_multi_sink_fan_out(spark, drop_dir, tmp_path):
         spark, available_now=True, checkpoint=str(tmp_path / "cp")
     )
     for q in queries:
-        q.awaitTermination(60)
+        assert q.awaitTermination(60)
     for name in (n1, n2):
         got = [r["value"] for r in spark.table(name).collect()]
         assert sorted(got) == sorted(payloads)

@@ -217,7 +217,7 @@ def test_bottom_k_sample_survives_restart(spark, tmp_path):
             .option("checkpointLocation", cp)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     def emit(eid, val):
         with open(log, "a") as f:

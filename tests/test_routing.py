@@ -98,7 +98,7 @@ def test_routing_stream(spark, tmp_path):
     q = RoutingSink(
         route_col="event_type", routes={"error": coll_e}, default=dropped
     ).start_stream(src, checkpoint=str(tmp_path / "cp"), available_now=True)
-    q.awaitTermination(60)
+    assert q.awaitTermination(60)
     assert sorted(r["payload"] for r in coll_e.rows) == ["p0", "p2"]
     assert [r["payload"] for r in dropped.rows] == ["p1"]
 

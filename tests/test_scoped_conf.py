@@ -1,6 +1,7 @@
 """Session conf swaps: scoped_conf restores what it changed, under
 failure and under concurrent drains, and no module outside session.py
-swaps session-global conf by hand."""
+swaps session-global conf by hand. A bounded drain's private
+checkpoint manager and its state-store cap stay inside the drain."""
 
 from __future__ import annotations
 
@@ -11,11 +12,14 @@ import threading
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
-from kawa_spark.queries.streaming_mode import _drain
+from kawa_spark.queries.streaming_mode import _PRIVATE_CHECKPOINT, _drain
 from kawa_spark.session import scoped_conf
+from kawa_spark.sinks import RoutingSink
 
 PARTS = "spark.sql.shuffle.partitions"
+MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 PKG = pathlib.Path(__file__).resolve().parent.parent / "kawa_spark"
 
 
@@ -39,6 +43,7 @@ def test_scoped_conf_restores_after_start_raises(spark, tmp_path):
     with pytest.raises(Exception, match="(?i)append"):
         _drain(_counts(spark, tmp_path / "src"), spark, state_partitions=3)
     assert spark.conf.get(PARTS) == before
+    assert spark.conf.get(MANAGER, None) is None
 
     key = "spark.kawa.test.scoped_conf_unset"
     with pytest.raises(RuntimeError):
@@ -131,3 +136,91 @@ def test_no_session_conf_swaps_outside_session_module():
                 continue
             offenders.append(f"{rel}:{no}: {line.strip()}")
     assert not offenders, offenders
+
+
+class _StatePartitions(StreamingQueryListener):
+    """Records the state operators' shuffle partition counts of every
+    progress event; ``ended`` is set once a query terminates (events
+    arrive in order, so its progress events are in by then)."""
+
+    def __init__(self):
+        self.parts = []
+        self.ended = threading.Event()
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        for op in event.progress.stateOperators:
+            self.parts.append(op.numShufflePartitions)
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.ended.set()
+
+
+@pytest.mark.parametrize("state_partitions", [None, 2])
+def test_drain_caps_state_stores_at_cores(spark, tmp_path, state_partitions):
+    """A default drain asks for 8 state partitions and runs
+    min(8, cores); an explicit smaller count is kept as it is."""
+    spark.range(40).select((F.col("id") % 4).alias("k")).write.parquet(
+        str(tmp_path / "src")
+    )
+    kwargs = {} if state_partitions is None else {"state_partitions": state_partitions}
+    want = state_partitions or min(8, spark.sparkContext.defaultParallelism)
+    listener = _StatePartitions()
+    spark.streams.addListener(listener)
+    try:
+        out = _drain(
+            _counts(spark, tmp_path / "src"), spark, mode="complete", **kwargs
+        )
+        assert listener.ended.wait(60)
+    finally:
+        spark.streams.removeListener(listener)
+    assert sorted(tuple(r) for r in out.collect()) == [(k, 10) for k in range(4)]
+    assert listener.parts and set(listener.parts) == {want}
+
+
+class _SessionConf:
+    """A routed sink that records the checkpoint manager its query's
+    session holds while each microbatch is written."""
+
+    def __init__(self):
+        self.seen = []
+
+    def write_batch(self, df):
+        self.seen.append(df.sparkSession.conf.get(MANAGER, None))
+
+
+def test_durable_checkpoint_keeps_default_manager_after_drain(spark, tmp_path):
+    """The private manager never outlives a drain's start(): a
+    checkpointed RoutingSink started right after a drain runs on the
+    session default."""
+    spark.range(40).select((F.col("id") % 4).alias("k")).write.parquet(
+        str(tmp_path / "src")
+    )
+    src = spark.readStream.schema("k long").parquet(str(tmp_path / "src"))
+
+    def start(cp):
+        sink = _SessionConf()
+        q = RoutingSink(route_col="k", routes={}, default=sink).start_stream(
+            src.select(F.col("k").cast("string").alias("k")),
+            checkpoint=str(tmp_path / cp),
+            available_now=True,
+        )
+        return q, sink
+
+    _drain(_counts(spark, tmp_path / "src"), spark, mode="complete")
+    assert spark.conf.get(MANAGER, None) is None
+    q, sink = start("cp")
+    assert q.awaitTermination(120)
+    assert sink.seen == [None]
+    assert spark.conf.get(MANAGER, None) is None
+
+    # the sink does see a manager its query was started under
+    with scoped_conf(spark, _PRIVATE_CHECKPOINT):
+        q, sink = start("cp2")
+    assert q.awaitTermination(120)
+    assert sink.seen == [_PRIVATE_CHECKPOINT[MANAGER]]

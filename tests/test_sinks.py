@@ -53,7 +53,7 @@ def test_file_sink_streaming_commit_log(spark, tmp_path):
             available_now=True,
         )
     )
-    q.awaitTermination(60)
+    assert q.awaitTermination(60)
     assert os.path.isdir(os.path.join(out, "_spark_metadata"))
     back = spark.read.json(out)
     assert sorted(r["value"] for r in back.collect()) == ["v0", "v1", "v2"]
@@ -74,7 +74,7 @@ def test_file_sink_streaming_s3_layout(spark, tmp_path):
     q = FileSink(out, format="json", compression="gzip", partition_source="ts").start_stream(
         src, checkpoint=str(tmp_path / "cp"), available_now=True
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     # dt=YYYY-MM-DD/hr=HH directories derived from EVENT time
     parts = glob.glob(os.path.join(out, "dt=*/hr=*"))

@@ -38,7 +38,7 @@ def test_running_total_survives_restart(spark, tmp_path):
             .option("checkpointLocation", cp)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     import json
 
@@ -153,7 +153,7 @@ def test_beacon_scores_survives_restart(spark, tmp_path):
             .option("checkpointLocation", cp)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     import json
 
@@ -224,7 +224,7 @@ def test_net_hops_survives_restart(spark, tmp_path):
             .option("checkpointLocation", cp)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     import json
 
@@ -292,7 +292,7 @@ def test_net_hop_chains_survive_restart(spark, tmp_path):
             .option("checkpointLocation", cp)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     import json
 
@@ -361,7 +361,7 @@ def test_funnel_states_survive_restart(spark, tmp_path):
             .option("checkpointLocation", cp)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     import json
 
@@ -434,7 +434,7 @@ def test_session_transitions_survive_restart(spark, tmp_path):
             .option("checkpointLocation", cp)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     import json
 
@@ -511,7 +511,7 @@ def test_net_hop_chains3_survive_restart(spark, tmp_path):
             .option("checkpointLocation", cp)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     import json
 
