@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kawa_spark.io import table, spread
+from kawa_spark.plans.materialize import materialize
 from kawa_spark.queries.llm_dedup import _SHINGLES_SQL as _SHINGLES_SQL_LOCAL
 from kawa_spark.registry import register
 
@@ -270,9 +271,7 @@ IDX_DF_DIVISOR = 1000
         / len(sa.shingles) >= 0.25
     """,
 )
-def similarity_containment(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def similarity_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment |A∩B| / |A| — catches a short document
     embedded inside a longer one, which symmetric jaccard misses
     (the quote/boilerplate detection primitive).
@@ -295,15 +294,13 @@ def similarity_containment(
     fan-out is ≤ cap², and the exact verify touches candidates
     only — no all-pairs term anywhere.
 
-    r15 optimization round: ``checkpoint=True`` (the registered form)
-    persists the NARROW capped-posting table — (doc_id, sh) longs,
+    The registered form materializes the bounded pair output
+    (containment ≥ 0.25 inside df-capped candidates — dedup-rate-
+    sized) with the NARROW capped-posting table — (doc_id, sh) longs,
     the only frame two consumers genuinely share (both sides of the
-    index self-join) — SERIALIZES its cache build (one count() before
-    the fan-out; the minhash_pairs race pattern), eagerly
-    materializes the BOUNDED pair output (containment ≥ 0.25 inside
-    df-capped candidates — dedup-rate-sized) via localCheckpoint, and
-    RELEASES the cache in a finally (the r14 leak-release class).
-    The wide shingle-array table is deliberately NOT persisted: a
+    index self-join) — cached for the build (plans.materialize;
+    docs/SCALE.md, "Lazy cores").
+    The wide shingle-array table is deliberately NOT cached: a
     first r15 form cached it for the verify sides too, which fed the
     planner accurate (large) in-memory statistics and flipped every
     verify join from broadcast to sort-merge — shuffling the
@@ -311,8 +308,7 @@ def similarity_containment(
     the 10× probe. The verify sides read the lazy scan (shingling a
     candidate-verify pass is cheaper than shuffling arrays; at real
     scale the planner's parquet-based estimates pick the robust
-    strategy). ``checkpoint=False`` is the lazy plan-audit form with
-    nothing persisted.
+    strategy).
     """
     from kawa_spark.queries.llm_dedup import _shingles
 
@@ -343,9 +339,6 @@ def similarity_containment(
         .filter(F.col("df") <= F.col("df_cap"))
         .drop("df", "df_cap")
     )
-    if checkpoint:
-        capped = capped.persist()
-        capped.count()
     cand = (
         capped.alias("pa")
         .join(capped.alias("pb"), "sh")
@@ -376,21 +369,7 @@ def similarity_containment(
         .select("doc_a", "doc_b", containment.alias("containment_a_in_b"))
         .filter(F.col("containment_a_in_b") >= 0.25)
     )
-    if not checkpoint:
-        return out
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        capped.unpersist()
-
-
-def similarity_containment_lazy(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """similarity_containment's exact expression tree minus the eager
-    checkpoint (and with nothing persisted) — the plan-audit form
-    (the dedup_ngram_jaccard_lazy discipline)."""
-    return similarity_containment(spark, sf_dir, checkpoint=False)
+    return materialize(out, capped)
 
 
 SEQ_CAPACITY = 2048  # tokens per packed training sequence

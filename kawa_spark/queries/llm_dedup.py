@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kawa_spark.io import table, spread
+from kawa_spark.plans.materialize import materialize
 from kawa_spark.queries.stats import md5_long, md5_long_sql
 from kawa_spark.registry import register
 
@@ -264,11 +265,9 @@ def _minhash_pairs_sql(src: str) -> str:
     """
 
 
-def minhash_signatures(
-    d: DataFrame, extra: tuple = (), persist: bool = True
-) -> DataFrame:
-    """(doc_id, text[, *extra]) → persisted (doc_id[, *extra], vh,
-    mhs) signature table — the shared construction behind
+def minhash_signatures(d: DataFrame, extra: tuple = ()) -> DataFrame:
+    """(doc_id, text[, *extra]) → (doc_id[, *extra], vh, mhs)
+    signature table — the shared construction behind
     dedup_minhash AND dedup_incremental_minhash (one definition, the
     _NORM_SQL discipline). ONE md5 per shingle; the 16 permutations
     are (h1 + i·h2) mod P over the digest's two 60-bit halves — 16×
@@ -278,11 +277,11 @@ def minhash_signatures(
     measured). ``vh`` re-bases each shingle's (h1, h2) pair as one
     long (injective: base-P digits), so exact-jaccard verifies
     intersect 8-byte ints — the string shingles never leave the scan
-    stage. Persisted (default): the table feeds the banding AND both
-    sides of the verify join; the r15 checkpoint forms
-    (minhash_pairs / incremental_minhash_matches with
-    checkpoint=True) release it in a finally once the bounded pair
-    set is materialized."""
+    stage. Lazy: the table feeds the banding AND both sides of the
+    verify join, so the materializing bindings (dedup_minhash,
+    dedup_incremental_minhash, twin #19) hand it to
+    plans.materialize.materialize as a reused frame; a stream
+    (twin #19) computes it map-side and drains it."""
     d = d.select("doc_id", *extra, _shingles(F.col("text")).alias("shingles"))
     P = _MH_PRIME
 
@@ -315,23 +314,15 @@ def minhash_signatures(
             "mhs",
         )
     )
-    # persist=False: streaming DataFrames cannot persist — twin #19
-    # (streaming_mode.stream_exec_dedup_incremental_minhash, shipped
-    # r12) computes this map-side ON the stream and drains it
-    return sig.persist() if persist else sig
+    return sig
 
 
-def minhash_band_rows(
-    sig: DataFrame, extra: tuple = (), persist: bool = True
-) -> DataFrame:
+def minhash_band_rows(sig: DataFrame, extra: tuple = ()) -> DataFrame:
     """Signature table → capped NARROW (doc_id[, *extra], band_id,
     band_hash) rows: the bucket joins move three longs + a short
     string, never the shingle arrays. The BUCKET_CAP skew guard runs
     over the combined bucket population (a degenerate bucket is
-    degenerate regardless of which snapshot its rows came from).
-    ``persist=False`` is the lazy-twin / plan-audit form (nothing
-    cached, full lineage); callers that persist own the release
-    (the r15 checkpoint forms unpersist in a finally)."""
+    degenerate regardless of which snapshot its rows came from)."""
     rows_per_band = N_PERM // N_BANDS
     banded = sig.select(
         "doc_id",
@@ -356,8 +347,7 @@ def minhash_band_rows(
             )
         ).alias("band"),
     ).select("doc_id", *extra, "band.band_id", "band.band_hash")
-    capped = _cap_buckets(banded)
-    return capped.persist() if persist else capped
+    return _cap_buckets(banded)
 
 
 @register("dedup_minhash", oracle=_minhash_oracle())
@@ -382,10 +372,11 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     and prefilter are both mirrored in the oracle, so the exact
     semantics are hash-verified.
 
-    r15 (VERDICT r14 item 2): the registered form eagerly
-    materializes the bounded verified-pair set and releases the
-    signature + band caches in a finally — see minhash_pairs;
-    dedup_minhash_lazy is the plan-audit twin.
+    The registered form materializes the bounded verified-pair set
+    with the signature and band tables cached for the build
+    (plans.materialize): the lazy tree recomputes the md5 signature
+    stage on both self-join sides and on both verify sides (2.10 →
+    5.85 s at sf0.1; docs/SCALE.md, "Lazy cores").
     """
     # Small single-file inputs arrive as ONE partition; the signature
     # stage is CPU-bound (16·|shingles| md5 per doc), so spread() it
@@ -394,55 +385,25 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(table(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id", "text"
     )
-    return minhash_pairs(d, checkpoint=True)
+    sig = minhash_signatures(d)
+    banded = minhash_band_rows(sig)
+    return materialize(minhash_band_pairs(sig, banded), sig, banded)
 
 
-def dedup_minhash_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The registered key's exact expression tree WITHOUT the eager
-    bounded checkpoint (and with nothing persisted) — what the plan
-    audits read, since the checkpoint collapses the executed plan to
-    a Scan ExistingRDD (the dedup_ngram_jaccard_lazy seam)."""
-    d = spread(table(spark, sf_dir, "documents"), "doc_id").select(
-        "doc_id", "text"
-    )
-    return minhash_pairs(d, checkpoint=False, persist=False)
-
-
-def minhash_pairs(
-    d: DataFrame, checkpoint: bool = False, persist: bool = True
-) -> DataFrame:
+def minhash_pairs(d: DataFrame) -> DataFrame:
     """The full self-join minhash pipeline over any (doc_id, text)
-    frame — dedup_minhash binds it to documents; dedup_lsh_recall
-    runs it over the plant-extended audit universe. Returns verified
-    (doc_a, doc_b, jaccard) pairs.
+    frame, as a lazy tree — dedup_lsh_recall runs it over the
+    plant-extended audit universe; dedup_minhash materializes the same
+    pieces (minhash_band_pairs). Returns verified (doc_a, doc_b,
+    jaccard) pairs."""
+    sig = minhash_signatures(d)
+    return minhash_band_pairs(sig, minhash_band_rows(sig))
 
-    ``checkpoint=True`` (the registered dedup_minhash form) eagerly
-    materializes the BOUNDED verified-pair set (dedup-rate-sized —
-    band buckets are capped, so candidates ≤ BUCKET_CAP/2 · |band
-    rows|) via localCheckpoint and releases the two corpus-sized
-    caches (signatures + capped band rows) in a finally — VERDICT
-    r14 item 2, the persist-leak class; the ngram_jaccard_pairs
-    pattern. ``checkpoint=False, persist=False`` is the pure lazy
-    tree (plan audits; an eager localCheckpoint truncates lineage to
-    a Scan ExistingRDD that blinds audit_plan). Since the r15
-    optimization round every registered caller — including
-    dedup_lsh_recall's — passes ``checkpoint=True`` (the driver
-    re-checked every declared key that round, so the off-window-
-    change bar did not apply); the default ``checkpoint=False,
-    persist=True`` legacy form remains only for the *_lazy plan-audit
-    twins and tests."""
-    sig = minhash_signatures(d, persist=persist)
-    banded = minhash_band_rows(sig, persist=persist)
-    if checkpoint:
-        # Serialize the cache build before fanning out: the one-action
-        # form lets the pair join's two map stages and the verify
-        # join's broadcast build race to populate the sig/band caches
-        # CONCURRENTLY, each recomputing the md5 signature stage until
-        # a partition lands (measured 2.0x wall at the 10x probe:
-        # 19.5-25.2s -> 10.3-12.2s, identical rows). One cheap pass
-        # over the narrow band rows populates both caches exactly
-        # once; every later consumer reads memory.
-        banded.count()
+
+def minhash_band_pairs(sig: DataFrame, banded: DataFrame) -> DataFrame:
+    """Band self-join + verify over a signature table and its capped
+    band rows: candidates are the distinct doc pairs sharing a band
+    bucket, verified against the signatures (minhash_verify)."""
     a = banded.alias("a")
     b = banded.alias("b")
     pairs = (
@@ -458,14 +419,7 @@ def minhash_pairs(
         )
         .distinct()  # distinct over two longs, not two shingle arrays
     )
-    out = minhash_verify(pairs, sig, sig, "doc_a", "doc_b")
-    if not checkpoint:
-        return out
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        banded.unpersist()
-        sig.unpersist()
+    return minhash_verify(pairs, sig, sig, "doc_a", "doc_b")
 
 
 def minhash_verify(
@@ -595,55 +549,36 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     |postings| rows); shuffling it once instead of three times is
     the scale call, bought with one extra 8-byte column on the
     narrow postings (measured equal-or-faster at sf0.1 too).
+
+    The registered form materializes the bounded pair set with the
+    size-annotated postings cached for the build (plans.materialize):
+    lazy, the tree reads >10 min at the 100× probe against ~80 s
+    (write_dedup_edges; docs/SCALE.md, "Lazy cores").
     """
-    return ngram_jaccard_pairs(
-        spread(table(spark, sf_dir, "documents"), "doc_id"),
-        checkpoint=True,
-    )
-
-
-def dedup_ngram_jaccard_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The registered key's exact expression tree WITHOUT the eager
-    bounded checkpoint (and with nothing persisted) — what the plan
-    audits read, since the checkpoint collapses the executed plan to
-    a Scan ExistingRDD (the dedup_incremental_embedding_lazy seam)."""
-    return ngram_jaccard_pairs(
-        spread(table(spark, sf_dir, "documents"), "doc_id"),
-        checkpoint=False,
-    )
+    pf = ngram_postings(spread(table(spark, sf_dir, "documents"), "doc_id"))
+    return materialize(ngram_posting_pairs(pf), pf)
 
 
 def ngram_jaccard_pairs(
-    d: DataFrame,
-    cap: int | None = None,
-    threshold: float = 0.15,
-    checkpoint: bool = False,
+    d: DataFrame, cap: int | None = None, threshold: float = 0.15
 ) -> DataFrame:
-    """Core posting-list jaccard over any (doc_id, text, ...) frame —
-    dedup_ngram_jaccard binds it to the documents table; tests drive
-    it directly on synthetic corpora (property-based cross-check vs a
-    brute-force Python reference in tests/test_ngram_property.py).
+    """Core posting-list jaccard over any (doc_id, text, ...) frame,
+    as a lazy tree — dedup_ngram_jaccard materializes the same pieces
+    (ngram_postings → ngram_posting_pairs); tests drive it directly
+    on synthetic corpora (property-based cross-check vs a brute-force
+    Python reference in tests/test_ngram_property.py).
 
     ``cap``: explicit df cap for tests; None (default) uses the
     adaptive max(DF_CAP_FLOOR, |docs|/DF_CAP_DIVISOR) — the corpus
     size comes from an in-plan 1-row aggregate broadcast onto the
-    postings, no extra driver action.
+    postings, no extra driver action."""
+    return ngram_posting_pairs(ngram_postings(d, cap), threshold)
 
-    ``checkpoint=True`` (the registered form — opted into explicitly
-    at the dedup_ngram_jaccard binding; the core DEFAULTS to the
-    side-effect-free lazy tree so direct library callers and
-    property tests never pay an eager Spark job at construction,
-    ADVICE r14) persists the
-    size-annotated postings for the self-join's two sides, eagerly
-    materializes the BOUNDED pair set (≤ cap/2·|postings| rows by the
-    df-cap argument above — dedup-rate-sized, never corpus-sized) via
-    localCheckpoint, and releases the posting cache in a finally so a
-    registry sweep cannot accumulate cached corpus partitions and a
-    failed job cannot leave them resident (VERDICT r13 item 3 — the
-    persist-leak class; the dedup_incremental_embedding pattern).
-    ``checkpoint=False`` returns the LAZY tree with nothing persisted
-    — the plan-audit form, since an eager localCheckpoint truncates
-    lineage to a Scan ExistingRDD that blinds audit_plan."""
+
+def ngram_postings(d: DataFrame, cap: int | None = None) -> DataFrame:
+    """df-capped (doc_id, s, n_sh) postings: shingle hashes with
+    document frequency ≤ the cap, each carrying its doc's filtered
+    set size. Both self-join sides read it."""
     posts = d.select(
         "doc_id", F.explode(_shingle_hashes(F.col("text"))).alias("s")
     )
@@ -660,32 +595,22 @@ def ngram_jaccard_pairs(
         cap_col = F.col("df_cap")
     else:
         cap_col = F.lit(cap)
-    # persist (checkpoint form only): the size-annotated postings
-    # feed both self-join sides; unpersisted, each would re-run the
-    # shingle scan. Released in the finally below.
-    pf = (
+    return (
         posts.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("s")))
         .filter(F.col("df") <= cap_col)
         .drop("df", "df_cap")
         .withColumn("n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
     )
-    if checkpoint:
-        pf = pf.persist()
-        # Serialize the cache build before the self-join fan-out (r15
-        # optimization round; the minhash_pairs pattern): under the
-        # single checkpoint action the two join-side map stages race
-        # to populate the postings cache CONCURRENTLY, each re-running
-        # the shingle explode + df window until a partition lands. One
-        # cheap pass populates it exactly once; both sides then read
-        # memory. Measured on the minhash twin of this shape: 2.0x
-        # wall at the 10x probe, identical rows.
-        pf.count()
+
+
+def ngram_posting_pairs(pf: DataFrame, threshold: float = 0.15) -> DataFrame:
+    """Posting self-join → (doc_a, doc_b, jaccard ≥ threshold)."""
     a, b = pf.alias("a"), pf.alias("b")
     jaccard = (
         F.col("shared").cast("double")
         / (F.col("n_a") + F.col("n_b") - F.col("shared"))
     ).alias("jaccard")
-    out = (
+    return (
         a.join(
             b,
             (F.col("a.s") == F.col("b.s"))
@@ -704,12 +629,6 @@ def ngram_jaccard_pairs(
         .select("doc_a", "doc_b", jaccard)
         .filter(F.col("jaccard") >= F.lit(threshold))
     )
-    if not checkpoint:
-        return out
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        pf.unpersist()
 
 
 def _cap_buckets(
@@ -801,7 +720,8 @@ def write_dedup_edges(
     ngram_jaccard_pairs), so the parquet is dedup-rate-sized, never
     corpus-sized.
 
-    Uses the CHECKPOINT form, not the lazy twin: the lazy tree
+    Uses the registered, materialized form, not the lazy core
+    (ngram_jaccard_pairs): the lazy tree
     recomputes the posting scan on both self-join sides (measured
     >10 min at the 100x probe vs ~80 s checkpointed), and the write
     then just drains the already-materialized bounded pair blocks."""
@@ -885,9 +805,7 @@ def _simhash_oracle() -> str:
 
 
 @register("dedup_simhash", oracle=_simhash_oracle())
-def dedup_simhash(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup: 64-bit weighted fingerprint per doc, banded
     hamming-distance candidate join (4 × 16-bit bands), verify with
     bit_count(xor) <= 3.
@@ -902,7 +820,8 @@ def dedup_simhash(
     occurrence — the r16 A/B winner (10.60 → 8.49 s at the 100×
     probe, 1.25×; VERDICT r15 item 7, guide §4.1 keep hashing in the
     JVM) over both the r15 occurrence form (kept as
-    ``_simhash_bitsums_occ``, the integer-identity witness —
+    ``_simhash_bitsums_occ`` in tests/witnesses.py, the
+    integer-identity witness —
     Σ_distinct(bit·cnt) == Σ_occurrences(bit) exactly, the oracle's
     own distinct-term shape) and a Python/Arrow distinct-term
     dictionary (0.90×: the Arrow boundary on the occurrence stream
@@ -910,17 +829,13 @@ def dedup_simhash(
     and no interpreted higher-order-function passes (the r15 win
     this builds on).
 
-    ``checkpoint=True`` (the registered form) persists the banded
-    fingerprints for the self-join's two sides, eagerly materializes
-    the BOUNDED near-dup pair set via localCheckpoint, and releases
-    the cache in a finally (VERDICT r13 item 3 — the persist-leak
-    class; the dedup_incremental_embedding pattern). False = the lazy
-    plan-audit form with nothing persisted.
+    The registered form is the lazy tree: AQE reuses the band-cap
+    window's exchange for the second self-join side, so the bitsum
+    stage runs once, and the tree beat the materialized form at sf0.1
+    and 10× (docs/SCALE.md, "Lazy cores").
     """
     d = spread(table(spark, sf_dir, "documents"), "doc_id")
-    return _simhash_pairs_from_bitsums(
-        _simhash_bitsums_precount(d), checkpoint
-    )
+    return _simhash_pairs_from_bitsums(_simhash_bitsums_precount(d))
 
 
 def _simhash_occ_terms(d: DataFrame) -> DataFrame:
@@ -928,40 +843,6 @@ def _simhash_occ_terms(d: DataFrame) -> DataFrame:
     return d.select(
         "doc_id",
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("term"),
-    )
-
-
-def _simhash_bitsums_occ(d: DataFrame) -> DataFrame:
-    """Per-doc (s0..s63, n_occ) bit sums, md5 hashed PER OCCURRENCE
-    in the JVM — the r15 registered shape, retired from the query
-    path by the r16 precount A/B (kept as the integer-identity
-    witness; tests/test_simhash_dict.py pins all three stages).
-
-    bit b of the simhash = sign of sum over occurrences of ±1, i.e.
-    bs_b = 2·s_b − n where s_b = Σ bit_b and n = occurrence count —
-    so the aggregate sums the RAW BIT (shift+and, no branch) 64
-    times plus ONE shared count, instead of 64 conditional ±1
-    selects (same integers — bs_b > 0 ⇔ 2·s_b > n — oracle
-    untouched). Measured PARITY at the 10× probe (7.6 vs 7.4 s —
-    the md5-per-occurrence stage dominates, not the aggregate
-    branches); kept as the simpler aggregate shape.
-    b is unrolled as a Python int (shift amounts must be literals);
-    bits 0-31 come from the low digest half, 32-63 from the high."""
-    digest = F.md5("term")
-    occ = _simhash_occ_terms(d).select(
-        "doc_id",
-        F.conv(F.substring(digest, 1, 8), 16, 10).cast("long").alias("h_lo"),
-        F.conv(F.substring(digest, 9, 8), 16, 10).cast("long").alias("h_hi"),
-    )
-
-    def bit_sum(b: int):
-        field = "h_lo" if b < 32 else "h_hi"
-        shift = b % 32
-        return F.sum(F.shiftright(F.col(field), shift).bitwiseAND(F.lit(1)))
-
-    return occ.groupBy("doc_id").agg(
-        *[bit_sum(b).alias(f"s{b}") for b in range(64)],
-        F.count(F.lit(1)).alias("n_occ"),
     )
 
 
@@ -1003,99 +884,17 @@ def _simhash_bitsums_precount(d: DataFrame) -> DataFrame:
     )
 
 
-def _simhash_bitsums_dict(d: DataFrame) -> DataFrame:
-    """The A/B challenger (VERDICT r15 item 7): per-doc bit sums via
-    one mapInArrow pass that md5-hashes each DISTINCT term once per
-    task (a task-level term→halves dictionary; Arrow dictionary-
-    encode surfaces the distinct terms per batch), then accumulates
-    the (n, 64) bit panel per doc with vectorized segment sums and
-    emits per-batch PARTIAL rows — the JVM groupBy(doc_id) sums the
-    partials to the same integers (Σ over any partition of the
-    occurrences). hashlib.md5 over the term's UTF-8 bytes is the
-    same digest F.md5 computes; int(hex[:8], 16) is conv(_, 16, 10).
-    Integer-exact by construction; pinned against the occurrence
-    form by tests/test_simhash_dict.py."""
-    from kawa_spark.shipping import ensure_shipped
-
-    ensure_shipped(d.sparkSession)
-    n_bits = 64
-    cols = [f"s{b}" for b in range(n_bits)]
-    schema = (
-        "doc_id long, "
-        + ", ".join(f"{c} long" for c in cols)
-        + ", n_occ long"
-    )
-
-    def fold(batches):
-        import hashlib
-
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        shifts_lo = np.arange(32, dtype=np.int64)
-        cache: dict = {}  # term -> (h_lo, h_hi); lives for the task
-
-        def halves(term: str):
-            hx = hashlib.md5(term.encode("utf-8")).hexdigest()
-            return (int(hx[:8], 16), int(hx[8:16], 16))
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            doc = batch.column(0).to_numpy(zero_copy_only=False)
-            enc = pc.dictionary_encode(batch.column(1))
-            if isinstance(enc, pa.ChunkedArray):
-                enc = enc.combine_chunks()
-            dict_terms = enc.dictionary.to_pylist()
-            pairs = [cache.get(t) or cache.setdefault(t, halves(t)) for t in dict_terms]
-            hl = np.fromiter(
-                (p[0] for p in pairs), dtype=np.int64, count=len(pairs)
-            )
-            hh = np.fromiter(
-                (p[1] for p in pairs), dtype=np.int64, count=len(pairs)
-            )
-            idx = enc.indices.to_numpy(zero_copy_only=False)
-            # (n, 64) occurrence bit panel: low digest half → bits
-            # 0-31, high half → bits 32-63 (the bit_sum convention)
-            bits = np.concatenate(
-                [
-                    (hl[idx, None] >> shifts_lo[None, :]) & 1,
-                    (hh[idx, None] >> shifts_lo[None, :]) & 1,
-                ],
-                axis=1,
-            )
-            # contiguous-run segment sums (explode emits a doc's terms
-            # consecutively; a doc split across batches just yields
-            # two partial rows — the downstream SUM is associative)
-            starts = np.r_[0, np.flatnonzero(np.diff(doc) != 0) + 1]
-            seg_doc = doc[starts]
-            seg_n = np.diff(np.r_[starts, len(doc)])
-            seg_sums = np.add.reduceat(bits, starts, axis=0)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(seg_doc, type=pa.int64())]
-                + [
-                    pa.array(seg_sums[:, b], type=pa.int64())
-                    for b in range(n_bits)
-                ]
-                + [pa.array(seg_n, type=pa.int64())],
-                names=["doc_id"] + cols + ["n_occ"],
-            )
-
-    partial = _simhash_occ_terms(d).mapInArrow(fold, schema=schema)
-    return partial.groupBy("doc_id").agg(
-        *[F.sum(c).alias(c) for c in cols],
-        F.sum("n_occ").alias("n_occ"),
-    )
-
-
-def _simhash_pairs_from_bitsums(
-    bitsums: DataFrame, checkpoint: bool
-) -> DataFrame:
+def _simhash_pairs_from_bitsums(bitsums: DataFrame) -> DataFrame:
     """Simhash assembly + banding + cap + self-join + hamming verify
-    over a per-doc (s0..s63, n_occ) bit-sum table — shared by the
-    registered precount stage (_simhash_bitsums_precount) and the
-    retained occurrence and dictionary witnesses."""
+    over a per-doc (s0..s63, n_occ) bit-sum table, as a lazy tree —
+    the shape every bitsum stage (the registered precount and the
+    integer-identity witnesses) feeds."""
+    return _simhash_band_pairs(_simhash_bands(bitsums))
+
+
+def _simhash_bands(bitsums: DataFrame) -> DataFrame:
+    """Per-doc bit sums → capped (doc_id, simhash, band_id, band_val)
+    rows: the 64-bit fingerprint, banded into 4 × 16 bits."""
     bit_weight = [F.lit(1 << b).cast("long") for b in range(63)] + [
         F.lit(-(1 << 63)).cast("long")  # sign bit: avoid long overflow
     ]
@@ -1131,15 +930,13 @@ def _simhash_pairs_from_bitsums(
     # honest 16-bit band averages N/65536 members — is quadratic in
     # the self-join; cap it exactly as minhash does, oracle-mirrored.
     # At test SF every bucket is far below the cap (no result change).
-    banded = _cap_buckets(banded, keys=("band_id", "band_val"))
-    if checkpoint:
-        banded = banded.persist()  # self-join: hash each doc once
-        # Serialize the cache build before the self-join fan-out (r15
-        # optimization round; the minhash_pairs pattern) — the raced
-        # work here is the 64-term bitsum simhash stage.
-        banded.count()
+    return _cap_buckets(banded, keys=("band_id", "band_val"))
+
+
+def _simhash_band_pairs(banded: DataFrame) -> DataFrame:
+    """Band self-join → distinct (doc_a, doc_b, hamming ≤ 3) pairs."""
     a, b = banded.alias("a"), banded.alias("b")
-    out = (
+    return (
         a.join(
             b,
             (F.col("a.band_id") == F.col("b.band_id"))
@@ -1156,18 +953,6 @@ def _simhash_pairs_from_bitsums(
         .distinct()
         .filter(F.col("hamming") <= 3)
     )
-    if not checkpoint:
-        return out
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        banded.unpersist()
-
-
-def dedup_simhash_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_simhash's exact expression tree minus the eager bounded
-    checkpoint — the plan-audit form (Scan ExistingRDD blindness)."""
-    return dedup_simhash(spark, sf_dir, checkpoint=False)
 
 
 # ---------------------------------------------------------------------------
@@ -1709,61 +1494,30 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior, newb = snapshot_split(
         spark, d, INC_MH_PLANTS_PRIOR, INC_MH_PLANTS_NEW
     )
-    return incremental_minhash_matches(prior, newb, checkpoint=True)
+    sig = incremental_minhash_sigs(prior, newb)
+    bands = minhash_band_rows(sig, extra=("side",))
+    return materialize(incremental_minhash_from_bands(sig, bands), sig, bands)
 
 
-def dedup_incremental_minhash_lazy(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The registered key's exact expression tree WITHOUT the eager
-    bounded checkpoint (and with nothing persisted) — the plan-audit
-    form (Scan ExistingRDD blindness)."""
-    d = spread(table(spark, sf_dir, "documents"), "doc_id").select(
-        "doc_id", "text"
-    )
-    prior, newb = snapshot_split(
-        spark, d, INC_MH_PLANTS_PRIOR, INC_MH_PLANTS_NEW
-    )
-    return incremental_minhash_matches(
-        prior, newb, checkpoint=False, persist=False
-    )
-
-
-def incremental_minhash_matches(
-    prior: DataFrame,
-    newb: DataFrame,
-    checkpoint: bool = False,
-    persist: bool = True,
-) -> DataFrame:
-    """Core over any two (doc_id, text) snapshots — the registered
-    key binds the modulo split + plants; the property test
-    (tests/test_incremental_minhash.py) drives it against a pure
-    hashlib md5-minhash reference on synthetic corpora.
-
-    ``checkpoint=True`` (the registered dedup_incremental_minhash
-    form) eagerly materializes the bounded match set inside
-    incremental_minhash_from_sigs and releases the side-tagged
-    signature cache here in a finally (the band cache is released by
-    from_sigs) — VERDICT r14 item 2. ``checkpoint=False,
-    persist=False`` is the lazy plan-audit tree. The default keeps
-    the legacy persist form for the example pipeline and direct
-    library callers that manage their own session lifetime."""
+def incremental_minhash_sigs(prior: DataFrame, newb: DataFrame) -> DataFrame:
+    """Side-tagged ('p'/'n') signature table over two (doc_id, text)
+    snapshots."""
     docs = prior.withColumn("side", F.lit("p")).unionByName(
         newb.withColumn("side", F.lit("n"))
     )
-    sig = minhash_signatures(docs, extra=("side",), persist=persist)
-    try:
-        return incremental_minhash_from_sigs(
-            sig, checkpoint=checkpoint, persist=persist
-        )
-    finally:
-        if checkpoint:
-            sig.unpersist()
+    return minhash_signatures(docs, extra=("side",))
 
 
-def incremental_minhash_from_sigs(
-    sig: DataFrame, checkpoint: bool = False, persist: bool = True
-) -> DataFrame:
+def incremental_minhash_matches(prior: DataFrame, newb: DataFrame) -> DataFrame:
+    """Core over any two (doc_id, text) snapshots, as a lazy tree —
+    the registered key binds the modulo split + plants and
+    materializes the same pieces; the property test
+    (tests/test_incremental_minhash.py) drives it against a pure
+    hashlib md5-minhash reference on synthetic corpora."""
+    return incremental_minhash_from_sigs(incremental_minhash_sigs(prior, newb))
+
+
+def incremental_minhash_from_sigs(sig: DataFrame) -> DataFrame:
     """The band/pair/verify half over an ALREADY-COMPUTED side-tagged
     signature table — split out so the streaming twin (#19,
     streaming_mode.stream_exec_dedup_incremental_minhash, shipped
@@ -1772,21 +1526,15 @@ def incremental_minhash_from_sigs(
     sigs. Composition equality is pinned by
     tests/test_incremental_minhash.py
     ::test_sig_level_core_composes_with_drained_stream, twin equality
-    by ::test_registered_twin_equals_batch_key.
+    by ::test_registered_twin_equals_batch_key."""
+    return incremental_minhash_from_bands(
+        sig, minhash_band_rows(sig, extra=("side",))
+    )
 
-    ``checkpoint=True`` eagerly materializes the bounded match set
-    and releases the band cache in a finally; the caller owns the
-    signature table's lifecycle. Since the r15 optimization round
-    BOTH registered callers — the batch key and twin #19 — pass
-    ``checkpoint=True`` (twin #19 additionally releases its prior-sig
-    cache); the legacy-persist default remains only for the *_lazy
-    plan-audit twins and tests."""
-    bands = minhash_band_rows(sig, extra=("side",), persist=persist)
-    if checkpoint:
-        # Same cache-build serialization as minhash_pairs: the n/p
-        # band splits and the two sig-side verify joins otherwise
-        # race the signature stage into the caches concurrently.
-        bands.count()
+
+def incremental_minhash_from_bands(sig: DataFrame, bands: DataFrame) -> DataFrame:
+    """new×prior bucket join over the side-tagged band rows, verified
+    against the signature table → (doc_id, prior_id, jaccard)."""
     bands_n = bands.filter(F.col("side") == "n").select(
         "doc_id", "band_id", "band_hash"
     )
@@ -1800,13 +1548,7 @@ def incremental_minhash_from_sigs(
     )
     sig_n = sig.filter(F.col("side") == "n").drop("side")
     sig_p = sig.filter(F.col("side") == "p").drop("side")
-    out = minhash_verify(pairs, sig_n, sig_p, "doc_id", "prior_id")
-    if not checkpoint:
-        return out
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        bands.unpersist()
+    return minhash_verify(pairs, sig_n, sig_p, "doc_id", "prior_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1898,9 +1640,7 @@ LSH_RECALL_SQL = f"""
 
 
 @register("dedup_lsh_recall", oracle=LSH_RECALL_SQL)
-def dedup_lsh_recall(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH dedup quality MEASURED, not asserted — the similarity_recall
     discipline applied to the dedup tier: every exact near-dup pair
     (shingle jaccard ≥ 0.2 via an UNCAPPED posting self-join over the
@@ -1935,19 +1675,16 @@ def dedup_lsh_recall(
 
     kawa parity: none; mandate (M) LLM-pipeline extension.
 
-    r15 optimization round: ``checkpoint=True`` (the registered form)
-    persists the ~AUDIT_SAMPLE_TARGET-row universe, SERIALIZES its
-    cache build (one count() before the four-branch fan-out — the
-    minhash pipeline + posts a/b + sizes each re-ran the corpus count
-    aggregate + md5 sample filter until a cache partition landed),
-    runs the minhash leg through ITS checkpointing form (sig/band
-    caches serialized + released), eagerly materializes the bounded
-    marked-pair table inside lsh_recall_report, and RELEASES the
-    universe cache in a finally — the last legacy persist-without-
-    release form in the registry is retired, so bench reps re-pay the
-    honest cold plan (the r14 leak-release class).
-    ``checkpoint=False`` is the lazy plan-audit form with nothing
-    persisted."""
+    The registered form is the lazy tree: the four branches over the
+    universe (the minhash leg, posts a/b and sizes) share its
+    exchanges through AQE reuse, and the tree beat the materialized
+    form at sf0.1 and 10× (docs/SCALE.md, "Lazy cores")."""
+    return lsh_recall_report(lsh_audit_universe(spark, sf_dir))
+
+
+def lsh_audit_universe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """dedup_lsh_recall's audit universe: the md5-rank hash sample of
+    ~AUDIT_SAMPLE_TARGET documents plus the plants."""
     d = spread(table(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id", "text"
     )
@@ -1961,47 +1698,23 @@ def dedup_lsh_recall(
         .filter(md5_long(F.col("doc_id")) % F.col("s_mod") == 0)
         .drop("s_mod")
     )
-    universe = sampled.unionByName(
+    return sampled.unionByName(
         spark.createDataFrame(LSH_RECALL_PLANTS, "doc_id long, text string")
     )
-    if not checkpoint:
-        return lsh_recall_report(universe)
-    universe = universe.persist()
-    universe.count()
-    try:
-        return lsh_recall_report(universe, checkpoint=True)
-    finally:
-        universe.unpersist()
 
 
-def dedup_lsh_recall_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_lsh_recall's exact expression tree minus the eager
-    checkpoint (and with nothing persisted) — the plan-audit form
-    (the dedup_ngram_jaccard_lazy discipline)."""
-    return dedup_lsh_recall(spark, sf_dir, checkpoint=False)
-
-
-def lsh_recall_report(
-    universe: DataFrame, checkpoint: bool = False
-) -> DataFrame:
+def lsh_recall_report(universe: DataFrame) -> DataFrame:
     """The found/missed marking + recall over ANY (doc_id, text)
     audit universe — the registered key binds the hash-sampled
     corpus + plants; the property test
     (tests/test_lsh_recall.py::test_lsh_recall_core_matches_hashlib_reference)
     drives random graded-similarity corpora against a pure-hashlib
-    minhash + posting-dict reference.
-
-    ``checkpoint=True`` (the registered binding's form): the minhash
-    leg runs its checkpointing core (sig/band caches serialized +
-    released) and the marked-pair table — which feeds BOTH the total
-    aggregate and the final projection, a duplicate audit-pipeline
-    subtree otherwise — is eagerly materialized once, so the returned
-    frame's lineage is independent of the caller's universe cache.
-    ``checkpoint=False`` (default) keeps the core side-effect-free
-    for direct library callers and the property test."""
-    mh = minhash_pairs(
-        universe, checkpoint=checkpoint, persist=checkpoint
-    ).select("doc_a", "doc_b", F.lit(True).alias("mh_found"))
+    minhash + posting-dict reference. The marked-pair table feeds
+    both the total aggregate and the final projection; AQE reuses its
+    exchanges, so the lazy tree runs the audit pipeline once."""
+    mh = minhash_pairs(universe).select(
+        "doc_a", "doc_b", F.lit(True).alias("mh_found")
+    )
     posts = universe.select(
         "doc_id", F.explode(_shingle_hashes(F.col("text"))).alias("s")
     )
@@ -2041,12 +1754,6 @@ def lsh_recall_report(
         "jaccard",
         F.coalesce(F.col("mh_found"), F.lit(False)).alias("found"),
     )
-    if checkpoint:
-        # marked feeds the total aggregate AND the final projection —
-        # without this the whole ground-truth pipeline (posting
-        # self-join + verify) executes twice per action. Bounded:
-        # ground-truth pairs inside the ~constant-size audit sample.
-        marked = marked.localCheckpoint(eager=True)
     tot = marked.agg(
         F.count(F.lit(1)).cast("long").alias("gt_pairs"),
         F.sum(F.col("found").cast("int")).cast("long").alias("found_pairs"),

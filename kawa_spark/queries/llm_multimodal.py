@@ -920,8 +920,10 @@ def multimodal_image_dedup_near(
     crop-identical class and the bit-flip class the exact key misses
     verify at every SF.
 
-    Scale: hashes are the map-only codec scan, MATERIALIZED once
-    (persist — the dedup tier's self-join discipline); bands explode
+    Scale: hashes are the map-only codec scan, run once: the two
+    self-join sides share the band-cap window's exchange through AQE
+    reuse (the lazy tree beat caching the band table at sf0.1 and 10×;
+    docs/SCALE.md, "Lazy cores"); bands explode
     IMG_BANDS narrow rows per doc; the bucket guard is the shared
     llm_dedup._cap_buckets window on the SAME (band_id, band_str)
     key the self-join shuffles on; the self-join moves (doc_id,
@@ -930,6 +932,12 @@ def multimodal_image_dedup_near(
     registration (docs/STATUS.md round-13 candidates).
 
     kawa parity: none; mandate (M) multimodal + dedup extension."""
+    return _image_near_pairs(_image_near_bands(spark, sf_dir))
+
+
+def _image_near_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Capped (doc_id, dhash_int, band_id, band_str) band rows of the
+    documents plus the planted trio: both self-join sides read them."""
     from kawa_spark.io import spread
 
     ta = _dhash_near_plants()
@@ -950,12 +958,6 @@ def multimodal_image_dedup_near(
     )
     from kawa_spark.queries.llm_dedup import _cap_buckets
 
-    # No persist on the hash table: since r15 the capped band table
-    # below is eagerly materialized (sized.count()), so the codec
-    # chain runs exactly once regardless — a corpus-sized cache with
-    # one reader buys nothing (the ADVICE r14 rule; the r12 4-scan
-    # finding this persist originally fixed is covered by the sized
-    # cache + serialization instead).
     hashed = image_hashes(docs).select(
         "doc_id",
         "dhash",
@@ -986,15 +988,11 @@ def multimodal_image_dedup_near(
     # the shared bucket guard: a window count on the SAME key the
     # self-join shuffles on (llm_dedup._cap_buckets — not a third
     # hand-rolled copy of the cap)
-    sized = _cap_buckets(
-        bands, cap=IMG_BUCKET_CAP, keys=("band_id", "band_str")
-    ).persist()
-    # Serialize the cache build before the self-join fan-out: the
-    # left/right map stages otherwise race to populate the sized
-    # cache, each re-running the Python codec chain until a partition
-    # lands (the minhash checkpoint forms' r15 finding, worst here
-    # because the racing work is the Arrow codec scan).
-    sized.count()
+    return _cap_buckets(bands, cap=IMG_BUCKET_CAP, keys=("band_id", "band_str"))
+
+
+def _image_near_pairs(sized: DataFrame) -> DataFrame:
+    """Band self-join → (doc_a, doc_b, hamming ≤ IMG_HAM_T)."""
     left = sized.select(
         "band_id",
         "band_str",
@@ -1013,27 +1011,13 @@ def multimodal_image_dedup_near(
         .select("doc_a", "doc_b", "ia", "ib")
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    out = cand.select(
+    return cand.select(
         "doc_a",
         "doc_b",
         F.bit_count(F.col("ia").bitwiseXOR(F.col("ib")))
         .cast("int")
         .alias("hamming"),
     ).filter(F.col("hamming") <= IMG_HAM_T)
-    # materialize the BOUNDED verified-pair set eagerly, then release
-    # the two corpus-sized caches (ADVICE r12 — the registry-sweep
-    # cache-leak class events_cooccurrence_lift hit in r8: a builder
-    # that persists and never unpersists accumulates cached corpus
-    # partitions across sweep invocations until LRU eviction). The
-    # localCheckpoint blocks the caller reads from are pair-count-
-    # sized (19k candidates at the 100× build), not corpus-sized,
-    # and are GC-cleaned with the returned frame. Releases in a
-    # finally so a failed checkpoint job cannot leave the caches
-    # resident for the rest of a sweep (code review r13 pass 2).
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        sized.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -1110,9 +1094,7 @@ def _inc_image_sql() -> str:
 
 
 @register("dedup_incremental_image", oracle=_inc_image_sql())
-def dedup_incremental_image(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def dedup_incremental_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-snapshot image near-dup — the FOURTH modality of the
     incremental-dedup family (exact digests, minhash shingles,
     embedding cosine, and now perceptual image hashes): today's
@@ -1135,15 +1117,19 @@ def dedup_incremental_image(
     mirrored in the oracle, so the capped semantics are
     hash-verified.
 
-    ``checkpoint=True`` (the registered form) persists the capped
-    band table for its two join-side consumers, eagerly materializes
-    the BOUNDED match set, and releases the cache in a finally (the
-    family discipline — clean from birth; VERDICT r13 item 3's class
-    never existed here; the hash table itself is single-consumer and
-    deliberately unpersisted, ADVICE r14). Registered on an r15 free
-    slot (docs/STATUS.md round-14 bank).
+    The registered form is the lazy tree: the n/p join sides share the
+    band-cap window's exchange through AQE reuse, so the codec chain
+    runs once, and the tree beat the materialized form at sf0.1 and
+    10× (docs/SCALE.md, "Lazy cores"). Registered on an r15 free slot
+    (docs/STATUS.md round-14 bank).
 
     kawa parity: none; mandate (M) multimodal + dedup extension."""
+    return incremental_image_from_hashes(_inc_image_hashed(spark, sf_dir))
+
+
+def _inc_image_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """dedup_incremental_image's side-tagged (doc_id, dhash, side,
+    dhash_int) hash table over the documents plus the plants."""
     from kawa_spark.io import spread
     from kawa_spark.queries.llm_dedup import is_prior_doc
 
@@ -1174,14 +1160,9 @@ def dedup_incremental_image(
             )
         )
     )
-    hashed = image_hashes(docs).select(
+    return image_hashes(docs).select(
         "doc_id", "dhash", side.alias("side"), _dhash_int().alias("dhash_int")
     )
-    # No persist on the hash table: its single consumer here is the
-    # band explode (both join sides read the capped band table, which
-    # incremental_image_from_hashes persists itself) — caching a
-    # corpus-sized frame with one reader buys nothing (ADVICE r14).
-    return incremental_image_from_hashes(hashed, checkpoint=checkpoint)
 
 
 def _dhash_int() -> F.Column:
@@ -1190,18 +1171,19 @@ def _dhash_int() -> F.Column:
     return F.conv(F.col("dhash"), 2, 10).cast("long")
 
 
-def incremental_image_from_hashes(
-    hashed: DataFrame, checkpoint: bool = True
-) -> DataFrame:
+def incremental_image_from_hashes(hashed: DataFrame) -> DataFrame:
     """The band/cap/join/verify half over an ALREADY-COMPUTED
-    side-tagged hash table (doc_id, side, dhash, dhash_int) — the
-    incremental_embedding_from_sigs seam for the image modality, so a
-    streaming twin can compute hashes ON the document stream (the
-    stateless Arrow stage maps per microbatch), drain them, and feed
-    the identical core. ``checkpoint=True`` persists the capped band
-    table for its two join-side consumers, eagerly materializes the
-    bounded match set, and releases that cache in a finally; the
-    caller owns the hash table's lifecycle."""
+    side-tagged hash table (doc_id, side, dhash, dhash_int), as a lazy
+    tree — the incremental_embedding_from_sigs seam for the image
+    modality, so a streaming twin can compute hashes ON the document
+    stream (the stateless Arrow stage maps per microbatch), drain
+    them, and feed the identical core."""
+    return incremental_image_from_bands(incremental_image_bands(hashed))
+
+
+def incremental_image_bands(hashed: DataFrame) -> DataFrame:
+    """Side-tagged hashes → capped (doc_id, side, dhash_int, band_id,
+    band_str) rows; both join sides read them."""
     bands = hashed.select(
         "doc_id",
         "side",
@@ -1227,15 +1209,12 @@ def incremental_image_from_hashes(
     ).select("doc_id", "side", "dhash_int", "s.band_id", "s.band_str")
     from kawa_spark.queries.llm_dedup import _cap_buckets
 
-    sized = _cap_buckets(bands, cap=IMG_BUCKET_CAP, keys=("band_id", "band_str"))
-    if checkpoint:
-        sized = sized.persist()
-        # Serialize the cache build: the n/p split consumers otherwise
-        # race the codec chain into the cache concurrently (the
-        # minhash checkpoint forms' r15 finding — worst for this
-        # modality, where the raced work is the Arrow codec scan and
-        # the hash table is deliberately unpersisted).
-        sized.count()
+    return _cap_buckets(bands, cap=IMG_BUCKET_CAP, keys=("band_id", "band_str"))
+
+
+def incremental_image_from_bands(sized: DataFrame) -> DataFrame:
+    """new×prior join inside shared capped bands, integer Hamming
+    verify → (doc_id, prior_id, hamming ≤ IMG_HAM_T)."""
     n = sized.filter(F.col("side") == "n").select(
         "band_id",
         "band_str",
@@ -1248,7 +1227,7 @@ def incremental_image_from_hashes(
         F.col("doc_id").alias("prior_id"),
         F.col("dhash_int").alias("i_p"),
     )
-    out = (
+    return (
         n.join(p, ["band_id", "band_str"])
         .select(F.col("n_id").alias("doc_id"), "prior_id", "i_n", "i_p")
         .dropDuplicates(["doc_id", "prior_id"])
@@ -1261,16 +1240,3 @@ def incremental_image_from_hashes(
         )
         .filter(F.col("hamming") <= IMG_HAM_T)
     )
-    if not checkpoint:
-        return out
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        sized.unpersist()
-
-
-def dedup_incremental_image_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_incremental_image's exact expression tree minus the eager
-    bounded checkpoint — the plan-audit form (Scan ExistingRDD
-    blindness)."""
-    return dedup_incremental_image(spark, sf_dir, checkpoint=False)

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kawa_spark.io import table, spread
+from kawa_spark.plans.materialize import materialize
 from kawa_spark.registry import register
 from kawa_spark.queries.llm_text import LANG_MARKERS
 
@@ -259,9 +260,7 @@ def corpus_length_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM scored, corpus
     """,
 )
-def quality_lm_commonness(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def quality_lm_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LM-lite rarity filter — the n-gram stand-in for CCNet-style
     perplexity filtering: a document whose bigrams are systematically
     rarer than the corpus norm is likely garbled/off-distribution.
@@ -290,19 +289,12 @@ def quality_lm_commonness(
       == Σ_b n_b EXACTLY (every posting row of bigram b contributes
       n_b to exactly one doc's sum), so the same two integers reach
       the same one double division — but the aggregate now reads the
-      tiny checkpointed per-doc frame, eliminating the third consumer
-      of the corpus-sized posting cache and the duplicate count-table
-      subtree.
-    * ``checkpoint=True`` (the registered form): the posting cache is
-      persisted, its build SERIALIZED (one count() before the fan-out
-      — the minhash_pairs race pattern), the per-doc scored table
-      eagerly checkpointed (|docs| rows of three longs — the output's
-      own cardinality, not the posting table's), and the posting
-      cache RELEASED in a finally: a registry sweep no longer
-      accumulates corpus-sized cached partitions and bench reps
-      re-pay the cold plan (the r14 leak-release class, VERDICT r14
-      what's-wrong item 1). ``checkpoint=False`` is the lazy
-      plan-audit twin with nothing persisted."""
+      small per-doc frame, eliminating the third consumer of the
+      corpus-sized postings and the duplicate count-table subtree.
+    * The registered form materializes the output (|docs| rows — the
+      per-doc table's own cardinality, not the posting table's) with
+      the postings cached for the build (plans.materialize;
+      docs/SCALE.md, "Lazy cores")."""
     from kawa_spark.functions.hof import bigrams, bind
 
     d = spread(table(spark, sf_dir, "documents"), "doc_id")
@@ -311,9 +303,6 @@ def quality_lm_commonness(
     # generate_series — the unguarded sequence(1, 0) form crashes
     bg_col = bind(F.split(F.lower(F.col("text")), " "), bigrams)
     posts = d.select("doc_id", F.explode(bg_col).alias("bg"))
-    if checkpoint:
-        posts = posts.persist()
-        posts.count()
     counts = posts.groupBy("bg").agg(F.count(F.lit(1)).alias("n_bg"))
     scored = (
         posts.join(counts, "bg")
@@ -323,11 +312,6 @@ def quality_lm_commonness(
             F.sum("n_bg").alias("sum_commonness"),
         )
     )
-    if checkpoint:
-        try:
-            scored = scored.localCheckpoint(eager=True)
-        finally:
-            posts.unpersist()
     # Σ_docs sum_commonness == Σ_b n_b², Σ_docs n_bigrams == Σ_b n_b:
     # identical integers to the old counts-table aggregate, summed in
     # DECIMAL so corpus scale cannot wrap, cast to DOUBLE only at the
@@ -341,7 +325,7 @@ def quality_lm_commonness(
     )
     avg = F.col("sum_commonness").cast("double") / F.col("n_bigrams")
     ratio = avg / F.col("corpus_avg")
-    return scored.crossJoin(F.broadcast(corpus)).select(
+    out = scored.crossJoin(F.broadcast(corpus)).select(
         "doc_id",
         "n_bigrams",
         "sum_commonness",
@@ -349,12 +333,4 @@ def quality_lm_commonness(
         ratio.alias("commonness_ratio"),
         (ratio >= 0.5).alias("keep"),
     )
-
-
-def quality_lm_commonness_lazy(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """quality_lm_commonness's exact expression tree minus the eager
-    checkpoint (and with nothing persisted) — the plan-audit form
-    (the dedup_ngram_jaccard_lazy discipline)."""
-    return quality_lm_commonness(spark, sf_dir, checkpoint=False)
+    return materialize(out, posts)

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kawa_spark.io import table, spread
+from kawa_spark.plans.materialize import materialize
 from kawa_spark.registry import register
 
 N_QUERIES = 10
@@ -91,7 +92,7 @@ def cosine(a: Column, b: Column) -> Column:
 # panel accumulation helpers (_seq_fold_dots/_seq_fold_d2, r16; the
 # r15 form was np.cumsum along the dim axis, same bits); Spark's
 # struct-min total order is replayed by _spark_argmin below. Pinned
-# against the retained struct-min witnesses by
+# against the struct-min witnesses in tests/witnesses.py by
 # tests/test_argmin_vectorized.py.
 
 
@@ -154,7 +155,7 @@ def _arrow_list_to_f64(col) -> "np.ndarray":
 # across the whole (n, k) panel: dim-count iterations of fully
 # vectorizable multiply-adds, one (n, k) temp total, no per-centroid
 # (n, dim) temps (VERDICT r15 item 5; guide §4.2). Pinned against the
-# retained JVM struct-min witnesses by tests/test_argmin_vectorized.py
+# JVM struct-min witnesses (tests/witnesses.py) by tests/test_argmin_vectorized.py
 # and the topk/PQ bit-identity tests.
 
 
@@ -289,37 +290,6 @@ def _assign_cells_vectorized(e: DataFrame, cent_rows: list) -> DataFrame:
     return e.select("vec_id", "embedding").mapInArrow(assign, schema=schema)
 
 
-def _assign_cells_structmin(en: DataFrame, cents: DataFrame) -> DataFrame:
-    """The pre-r15 IVF assignment — exploded broadcast join +
-    lexicographic struct-min aggregate — kept PRIVATE as the
-    bit-identity witness for ``_assign_cells_vectorized`` (the
-    ``_similarity_topk_catalyst`` pattern, ADVICE r14): never
-    registered, never benched; retired from the query path for the
-    measured 108×-at-10× SortAggregate/interpreted-fold ceiling.
-    ``en`` must carry (vec_id, embedding, n_e); ``cents``
-    (cell_id, cent, n_c)."""
-    pair_cos = dot(F.col("embedding"), F.col("cent")) / (
-        F.col("n_e") * F.col("n_c")
-    )
-    return (
-        en.join(F.broadcast(cents))
-        .select(
-            "vec_id",
-            F.struct(
-                (-pair_cos).alias("dist"), "cell_id", "embedding", "n_e"
-            ).alias("c"),
-        )
-        .groupBy("vec_id")
-        .agg(F.min("c").alias("b"))
-        .select(
-            "vec_id",
-            F.col("b.embedding").alias("embedding"),
-            F.col("b.n_e").alias("n_e"),
-            F.col("b.cell_id").alias("cell_id"),
-        )
-    )
-
-
 _DOT_SQL = """
     list_reduce(
       list_prepend(CAST(0.0 AS DOUBLE),
@@ -362,45 +332,14 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scan, all |Q| dot products per Arrow batch at C speed,
     batch-local top-k so the final merge window sees batches·|Q|·k
     rows, never the corpus. Scores are BIT-IDENTICAL to the previous
-    per-row Catalyst-fold body — retained as the private witness
-    ``_similarity_topk_catalyst`` below (np.cumsum is the same
+    per-row Catalyst-fold body — retained as the witness
+    ``_similarity_topk_catalyst`` in tests/witnesses.py (np.cumsum is the same
     sequential IEEE left fold as F.aggregate / DuckDB list_reduce;
     pinned by tests/test_pq_adc.py::test_vectorized_topk_bit_identical
     against that witness, ADVICE r14) — so the oracle is unchanged.
     Measured: 34.85 s → 1.90 s at the 100× probe — the swap retires
     the engine's last plan-level scale ceiling (docs/SCALE.md)."""
     return similarity_topk_vectorized(spark, sf_dir)
-
-
-def _similarity_topk_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r14 registered body — the per-row JVM Catalyst-fold
-    cosine (F.aggregate is a strictly sequential IEEE left fold) kept
-    PRIVATE as the bit-identity witness: with the registered key now
-    delegating to the vectorized core, a registered-vs-vectorized
-    comparison would test the vectorized form against itself (ADVICE
-    r14). tests/test_pq_adc.py::test_vectorized_topk_bit_identical
-    compares THIS body to the Arrow/numpy core, and the zero-norm
-    test's DIVIDE_BY_ZERO legs exercise ITS ANSI division. Not a
-    query path — never registered, never benched; retired from
-    production for the measured 46×-at-100× fold ceiling
-    (docs/SCALE.md r13/r14)."""
-    e = spread(table(spark, sf_dir, "embeddings"), "vec_id")
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    scored = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            cosine(F.col("q_emb"), F.col("embedding")).alias("score"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("n_id"))
-    return (
-        scored.select("q_id", "n_id", "score", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= TOP_K)
-    )
 
 
 def _hyperplanes() -> list[list[float]]:
@@ -572,8 +511,8 @@ def _multiprobe_frame(
     r16 optimization round (VERDICT r15 item 3; guide §4.2): one
     ``mapInArrow`` pass over the corpus with the |Q| query rows and
     their probe-bucket sets shipped in the closure, replacing the
-    Catalyst form (retained as the private witness
-    ``_multiprobe_catalyst`` below; tests/test_multiprobe_vectorized.py
+    Catalyst form (retained as the witness ``_multiprobe_catalyst``
+    in tests/witnesses.py; tests/test_multiprobe_vectorized.py
     pins bit-identity at both radii). The Catalyst form paid EIGHT
     interpreted ``aggregate(zip_with(...))`` HOF folds per corpus row
     to compute the signature, then one more interpreted 3-fold cosine
@@ -677,50 +616,6 @@ def _multiprobe_frame(
     return local.select(
         "q_id", "n_id", "score", F.row_number().over(w).alias("rnk")
     ).filter(F.col("rnk") <= TOP_K)
-
-
-def _multiprobe_catalyst(
-    spark: SparkSession, sf_dir: str, radius: int = 1
-) -> DataFrame:
-    """The pre-r16 registered body — interpreted-HOF signatures +
-    broadcast probe join + per-pair Catalyst-fold cosine — kept
-    PRIVATE as the bit-identity witness for the vectorized
-    ``_multiprobe_frame`` (the ``_similarity_topk_catalyst`` pattern):
-    never registered, never benched; retired from the query path for
-    the per-candidate interpreted-fold ceiling (candidates ≈14% of
-    the corpus per query at radius 2)."""
-    e = table(spark, sf_dir, "embeddings")
-    corpus = e.select(
-        "vec_id", "embedding", _signature(F.col("embedding"), ANN_PLANES).alias("sig")
-    )
-    q = corpus.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.explode(
-            F.array(
-                F.col("sig"),
-                *[
-                    F.col("sig").bitwiseXOR(F.lit(m)).alias(f"p{k}")
-                    for k, m in enumerate(_probe_masks(radius))
-                ],
-            )
-        ).alias("probe_sig"),
-    )
-    cand = corpus.join(
-        F.broadcast(q),
-        (F.col("sig") == F.col("probe_sig")) & (F.col("vec_id") != F.col("q_id")),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("n_id"))
-    return (
-        cand.select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            cosine(F.col("q_emb"), F.col("embedding")).alias("score"),
-        )
-        .distinct()
-        .select("q_id", "n_id", "score", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= TOP_K)
-    )
 
 
 @register("similarity_lsh_multiprobe", oracle=_multiprobe_oracle())
@@ -959,9 +854,7 @@ def _embedding_dedup_oracle() -> str:
 
 
 @register("dedup_embedding_cosine", oracle=_embedding_dedup_oracle())
-def dedup_embedding_cosine(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup: pairs in the same LSH bucket with cosine
     ≥ 0.9. Bucket self-join instead of all-pairs — identical shape to
     dedup_minhash but in vector space.
@@ -970,12 +863,16 @@ def dedup_embedding_cosine(
     N_PLANT above) so the bucket-join + cosine predicate is verified
     on TRUE POSITIVES, not just on the empty set.
 
-    ``checkpoint=True`` (the registered form) persists the signed
-    vectors for the self-join's two sides, eagerly materializes the
-    BOUNDED match set via localCheckpoint, and releases the cache in
-    a finally (VERDICT r13 item 3 — the persist-leak class; the
-    incremental_embedding_matches pattern). False = the lazy
-    plan-audit form with nothing persisted."""
+    The registered form is the lazy tree: AQE reuses the bucket-cap
+    window's exchange for the second self-join side, so the sign-LSH
+    stage runs once, and the tree beat the materialized form at sf0.1
+    and 10× (docs/SCALE.md, "Lazy cores")."""
+    return _embedding_bucket_pairs(_embedding_cosine_corpus(spark, sf_dir))
+
+
+def _embedding_cosine_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings plus the planted near-dups, signed and with
+    degenerate sig buckets evicted: both self-join sides read it."""
     base = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -1000,24 +897,17 @@ def dedup_embedding_cosine(
     # EMB_BUCKET_CAP); the window count shuffles on the same key the
     # join uses, so the guard costs no extra repartitioning
     w_bucket = Window.partitionBy("sig")
-    e = (
+    return (
         e.withColumn("bucket_n", F.count(F.lit(1)).over(w_bucket))
         .filter(F.col("bucket_n") <= EMB_BUCKET_CAP)
         .drop("bucket_n")
     )
-    if checkpoint:
-        e = e.persist()  # self-join: hash each vector once
-        # Serialize the cache build before the self-join fan-out (r15
-        # optimization round; the minhash_pairs pattern) — the raced
-        # work here is the sign-LSH signature + bucket-cap window.
-        # Measured same-build at the 10x probe: 5.06 s -> 4.18 s.
-        # (The incremental sibling incremental_embedding_matches
-        # deliberately does NOT take this: its A/B at 10x measured
-        # the extra pass as a net LOSS, 2.5 s -> 3.1 s — its n/p
-        # fan-out races less work than one full extra corpus pass.)
-        e.count()
+
+
+def _embedding_bucket_pairs(e: DataFrame) -> DataFrame:
+    """Sig-bucket self-join → (vec_a, vec_b, cos_sim ≥ 0.9)."""
     a, b = e.alias("a"), e.alias("b")
-    out = (
+    return (
         a.join(
             b,
             (F.col("a.sig") == F.col("b.sig"))
@@ -1030,19 +920,6 @@ def dedup_embedding_cosine(
         )
         .filter(F.col("cos_sim") >= 0.9)
     )
-    if not checkpoint:
-        return out
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        e.unpersist()
-
-
-def dedup_embedding_cosine_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_embedding_cosine's exact expression tree minus the eager
-    bounded checkpoint — the plan-audit form (Scan ExistingRDD
-    blindness)."""
-    return dedup_embedding_cosine(spark, sf_dir, checkpoint=False)
 
 
 # Cross-snapshot embedding near-dup (r12 core — registration banked
@@ -1093,17 +970,14 @@ def _inc_embedding_oracle() -> str:
     """
 
 
-def embedding_sigs(tagged: DataFrame, persist: bool = True) -> DataFrame:
+def embedding_sigs(tagged: DataFrame) -> DataFrame:
     """(vec_id, side, embedding) → + the 16-bit sign-LSH sig — the
     map-side stage of the cross-snapshot embedding matcher, split out
     (the minhash_signatures discipline) so a streaming twin can
-    compute it ON the embedding stream (persist=False: streaming
-    DataFrames cannot persist) and drain it; the batch core persists
-    because both join sides read it."""
-    e = tagged.select(
+    compute it ON the embedding stream and drain it."""
+    return tagged.select(
         "vec_id", "side", "embedding", _signature(F.col("embedding")).alias("sig")
     )
-    return e.persist() if persist else e
 
 
 def incremental_embedding_from_sigs(e: DataFrame) -> DataFrame:
@@ -1138,24 +1012,13 @@ def incremental_embedding_from_sigs(e: DataFrame) -> DataFrame:
     )
 
 
-def incremental_embedding_matches(
-    prior: DataFrame, newb: DataFrame, checkpoint: bool = True
-) -> DataFrame:
+def incremental_embedding_matches(prior: DataFrame, newb: DataFrame) -> DataFrame:
     """Today's embedding batch bucket-joined against the PRIOR
     corpus's sign-LSH buckets and verified with exact cosine ≥ 0.9 —
     dedup_embedding_cosine's self-join replaced by the new×prior
     cross-snapshot form (the dedup_incremental_minhash shape in
     vector space). Combined-population EMB_BUCKET_CAP guard, output
     (vec_id, prior_id, cos_sim); novel vectors are absent.
-
-    ``checkpoint=True`` (the registered form) materializes the
-    BOUNDED match set eagerly and releases the corpus-sized sig
-    cache in a finally (code review r13, twice: the registry-sweep
-    cache-leak class, AND the leak must not recur on the error
-    path). ``checkpoint=False`` returns the LAZY expression tree
-    with nothing persisted — the plan-audit form, since an eager
-    localCheckpoint truncates lineage to a Scan ExistingRDD that
-    blinds audit_plan (code review r13 pass 2).
 
     Scale: a production run persists the prior side's (vec_id, sig)
     table bucketed by sig with the snapshot (the compact-state
@@ -1164,24 +1027,22 @@ def incremental_embedding_matches(
     capped buckets — never quadratic. Property test:
     tests/test_embedding_dedup.py drives it against a pure-Python
     left-fold cosine + signature reference on random vector sets."""
-    docs = prior.select(
+    return incremental_embedding_from_sigs(
+        embedding_sigs(_side_tagged(prior, newb))
+    )
+
+
+def _side_tagged(prior: DataFrame, newb: DataFrame) -> DataFrame:
+    """(vec_id, side, embedding) over the two snapshots."""
+    return prior.select(
         "vec_id", F.lit("p").alias("side"), "embedding"
     ).unionByName(newb.select("vec_id", F.lit("n").alias("side"), "embedding"))
-    e = embedding_sigs(docs, persist=checkpoint)
-    out = incremental_embedding_from_sigs(e)
-    if not checkpoint:
-        return out
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        e.unpersist()
 
 
 def _inc_embedding_inputs(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """The registered key's (prior, newb) construction — shared by
-    the registered binding and its lazy plan-audit twin below."""
+    """The registered key's (prior, newb) construction."""
     from kawa_spark.queries.llm_dedup import is_prior_doc
 
     base = table(spark, sf_dir, "embeddings").select(
@@ -1208,18 +1069,8 @@ def dedup_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined-population EMB_BUCKET_CAP, never quadratic). Oracle:
     _inc_embedding_oracle."""
     prior, newb = _inc_embedding_inputs(spark, sf_dir)
-    return incremental_embedding_matches(prior, newb)
-
-
-def dedup_incremental_embedding_lazy(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The registered key's exact expression tree WITHOUT the eager
-    bounded checkpoint (and with nothing persisted) — what the plan
-    audits read, since the checkpoint collapses the executed plan to
-    a Scan ExistingRDD (code review r13 pass 2)."""
-    prior, newb = _inc_embedding_inputs(spark, sf_dir)
-    return incremental_embedding_matches(prior, newb, checkpoint=False)
+    e = embedding_sigs(_side_tagged(prior, newb))
+    return materialize(incremental_embedding_from_sigs(e), e)
 
 
 @register(
@@ -1362,7 +1213,7 @@ def _lloyd_assign(e: DataFrame, cents: "DataFrame | list") -> DataFrame:
     SortAggregate that materialized and SORTED all K·N candidate
     rows (each carrying the embedding array) before reducing to N,
     with each of the K·N distances an interpreted HOF fold. Retained
-    witness: ``_lloyd_assign_structmin`` below
+    witness: ``_lloyd_assign_structmin`` in tests/witnesses.py
     (tests/test_argmin_vectorized.py pins row identity).
     The embedding stays on the row for downstream stages, and the
     vector's sequential-fold L2 norm ``n_e`` rides along for free
@@ -1418,29 +1269,6 @@ def _lloyd_assign(e: DataFrame, cents: "DataFrame | list") -> DataFrame:
             )
 
     return e.select("vec_id", "embedding").mapInArrow(assign, schema=schema)
-
-
-def _lloyd_assign_structmin(e: DataFrame, cents: DataFrame) -> DataFrame:
-    """The pre-r15 Lloyd assignment — exploded broadcast join +
-    lexicographic struct-min aggregate — kept PRIVATE as the
-    bit-identity witness for ``_lloyd_assign`` (the
-    ``_similarity_topk_catalyst`` pattern, ADVICE r14): never a query
-    path; retired for the SortAggregate-over-K·N-embedding-rows +
-    interpreted-fold cost (22.9× at the 10× probe for K=8)."""
-    scored = e.join(F.broadcast(cents)).select(
-        "vec_id",
-        "embedding",
-        "cid",
-        _d2_col(F.col("embedding"), F.col("emb")).alias("d2"),
-    )
-    return scored.groupBy("vec_id").agg(
-        F.min(F.struct("d2", "cid", "embedding")).alias("b")
-    ).select(
-        "vec_id",
-        F.col("b.cid").alias("cid"),
-        F.col("b.d2").alias("d2"),
-        F.col("b.embedding").alias("embedding"),
-    )
 
 
 def _lloyd_seeds(e: DataFrame) -> DataFrame:

@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 from kawa_spark.envelope import normalize
 from kawa_spark.functions.exact import floordiv
 from kawa_spark.io import stream_table, table
+from kawa_spark.plans.materialize import materialize
 from kawa_spark.queries.events import (
     ANOMALY_MAD_SQL,
     DAY_US,
@@ -51,8 +52,9 @@ from kawa_spark.queries.llm_dedup import (
     _inc_minhash_oracle,
     _norm_digest,
     classify_incremental,
-    incremental_minhash_from_sigs,
+    incremental_minhash_from_bands,
     is_prior_doc,
+    minhash_band_rows,
     minhash_signatures,
     prior_digest_index,
     snapshot_split,
@@ -123,7 +125,7 @@ from kawa_spark.queries.stats import (
     quantile_sketch_scores,
 )
 from kawa_spark.registry import register
-from kawa_spark.session import scoped_conf
+from kawa_spark.session import checkpoint_conf, scoped_conf
 from kawa_spark.sources.file import RateSource
 from kawa_spark.streaming.rollup import read_rollup, start_incremental_rollup
 from kawa_spark.streaming.stateful import (
@@ -151,21 +153,6 @@ def _await(q: StreamingQuery, what: str) -> None:
         raise TimeoutError(f"{what} did not finish within 300s")
 
 
-# Checkpoint file manager for PRIVATE checkpoints only. Without
-# Hadoop's native library the local filesystem shells out for link
-# status, so the session default (FileContext-based) renames each
-# checkpoint and state file through two spawned ``readlink``
-# processes; this manager renames with one rename(2). It is safe only
-# for a checkpoint with one writer that is never resumed
-# (docs/SCALE.md, "Bounded drains").
-_PRIVATE_CHECKPOINT = {
-    "spark.sql.streaming.checkpointFileManagerClass": (
-        "org.apache.spark.sql.execution.streaming.checkpointing."
-        "FileSystemBasedCheckpointFileManager"
-    )
-}
-
-
 def _drain(
     df: DataFrame,
     spark: SparkSession,
@@ -180,6 +167,9 @@ def _drain(
     meanwhile, so concurrent drains cannot leave the session at each
     other's value. Two keys are scoped:
 
+    * The checkpoint file manager of Spark's local temp checkpoint
+      (``session.checkpoint_conf``, the rule every streaming start()
+      follows).
     * ``state_partitions``, capped at the core count
       (``defaultParallelism``). A drain is one-shot: a state store
       beyond the cores buys no parallelism, yet still costs a store
@@ -187,17 +177,9 @@ def _drain(
       one more Python task (each pays ~0.2 s of worker setup CPU).
       The cap changes nothing on hosts with at least
       ``state_partitions`` cores. None means the session default,
-      uncapped.
-    * The checkpoint file manager (``_PRIVATE_CHECKPOINT``). The
-      memory sink's checkpoint is a fresh temp dir with one writer
-      that is never resumed: it records no acks, and no restart ever
-      reads what a crash left in it, so its renames need not be
-      atomic on every filesystem. A durable checkpoint (RoutingSink,
-      Pipeline, the incremental rollup, any user
-      ``checkpointLocation``) is read back after a crash and keeps
-      the session default."""
+      uncapped."""
     name = f"q_{uuid.uuid4().hex[:10]}"
-    conf = dict(_PRIVATE_CHECKPOINT)
+    conf = checkpoint_conf(spark, None)
     if state_partitions is not None:
         cores = spark.sparkContext.defaultParallelism
         conf["spark.sql.shuffle.partitions"] = str(min(state_partitions, cores))
@@ -234,9 +216,7 @@ def _drain_files(df: DataFrame, spark: SparkSession, prefix: str) -> DataFrame:
     which matches the memory sink's same-name-requery semantics."""
     root = _plants_scratch_dir(prefix)
     shutil.rmtree(root, ignore_errors=True)
-    # the wiped per-process checkpoint is private: one writer, never
-    # resumed (see _drain)
-    with scoped_conf(spark, _PRIVATE_CHECKPOINT):
+    with scoped_conf(spark, checkpoint_conf(spark, f"{root}/ckpt")):
         q = (
             df.writeStream.format("parquet")
             .option("path", f"{root}/data")
@@ -523,19 +503,12 @@ def stream_exec_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     #   per-query is safe (it's locked into a checkpoint at first
     #   batch; the streaming query captures a cloned conf at start,
     #   so the scope covers start() only).
-    # The fresh mkdtemp checkpoint is also private (one writer, never
-    # resumed), so it takes the drains' checkpoint manager; a durable
-    # start_incremental_rollup keeps the session default.
     provider = (
         "org.apache.spark.sql.execution.streaming.state."
         "HDFSBackedStateStoreProvider"
     )
     with scoped_conf(
-        spark,
-        {
-            **_PRIVATE_CHECKPOINT,
-            "spark.sql.streaming.stateStore.providerClass": provider,
-        },
+        spark, {"spark.sql.streaming.stateStore.providerClass": provider}
     ):
         q = start_incremental_rollup(
             spark,
@@ -1381,25 +1354,16 @@ def stream_exec_dedup_incremental_minhash(
         spark.createDataFrame(INC_MH_PLANTS_NEW, "doc_id long, text string"),
     )
     sig_stream = minhash_signatures(
-        sn.unionByName(p).withColumn("side", F.lit("n")),
-        extra=("side",),
-        persist=False,
+        sn.unionByName(p).withColumn("side", F.lit("n")), extra=("side",)
     )
     drained = _drain_files(sig_stream, spark, "kawa_incmh_sigdrain_")
-    # r15 optimization round: the twin now runs the CHECKPOINTING
-    # core (eager bounded match set, band cache serialized + released
-    # in its finally) and releases the prior-sig cache itself — the
-    # twin #20 lifecycle, retiring the last legacy-persist form in
-    # the registered streaming tier. Same rows; the caches no longer
-    # outlive the builder. (No separate prior_sig.count() here: the
-    # core's bands.count() pass reads THROUGH the prior-sig cache, so
-    # one pass serializes both layers.)
-    try:
-        return incremental_minhash_from_sigs(
-            prior_sig.unionByName(drained), checkpoint=True
-        )
-    finally:
-        prior_sig.unpersist()
+    # the prior-sig cache sits under the band cache, so the helper's
+    # one count of the bands fills both layers
+    sig = prior_sig.unionByName(drained)
+    bands = minhash_band_rows(sig, extra=("side",))
+    return materialize(
+        incremental_minhash_from_bands(sig, bands), prior_sig, bands
+    )
 
 
 @register(
@@ -1438,7 +1402,19 @@ def stream_exec_dedup_incremental_embedding(
     key's story (here rebuilt from the split for the bounded drain).
     Runtime state is zero rows — the only streaming stage is
     stateless — and the drained sig table is the parquet state the
-    next snapshot's prior side reads: the production shape."""
+    next snapshot's prior side reads: the production shape.
+
+    The registered form is the lazy tree: it was no slower than
+    caching the prior sigs and checkpointing, at sf0.1 and 10×
+    (docs/SCALE.md, "Lazy cores")."""
+    prior_sig, drained = _inc_embedding_twin_sigs(spark, sf_dir)
+    return incremental_embedding_from_sigs(prior_sig.unionByName(drained))
+
+
+def _inc_embedding_twin_sigs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Twin #20's (static prior sigs, drained new-side sigs)."""
     base = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -1461,20 +1437,9 @@ def stream_exec_dedup_incremental_embedding(
     )
     sn = s.filter(~is_prior_doc(F.col("vec_id")))
     sig_stream = embedding_sigs(
-        sn.unionByName(p).withColumn("side", F.lit("n")), persist=False
+        sn.unionByName(p).withColumn("side", F.lit("n"))
     )
-    drained = _drain_files(sig_stream, spark, "kawa_incemb_sigdrain_")
-    # eager bounded-output checkpoint + release of the corpus-sized
-    # prior-sig cache (code review r13 — the sweep cache-leak class;
-    # the drained side is parquet-backed, nothing to release there).
-    # The release is in a finally so a failed checkpoint job cannot
-    # leave the cache resident for the rest of a sweep (pass 2).
-    try:
-        return incremental_embedding_from_sigs(
-            prior_sig.unionByName(drained)
-        ).localCheckpoint(eager=True)
-    finally:
-        prior_sig.unpersist()
+    return prior_sig, _drain_files(sig_stream, spark, "kawa_incemb_sigdrain_")
 
 
 @register("stream_exec_dedup_incremental_image", oracle=_inc_image_sql())
@@ -1506,7 +1471,21 @@ def stream_exec_dedup_incremental_image(
     (doc_id, dhash) parquet IS the state the next snapshot's prior
     side reads (8 bytes + id per image). Runtime state is zero rows.
 
+    The registered form is the lazy tree: the n/p join sides share
+    the band-cap window's exchange through AQE reuse, and the tree beat
+    caching the prior hashes and bands at sf0.1 and 10× (docs/SCALE.md,
+    "Lazy cores").
+
     kawa parity: none; mandate (M) multimodal + dedup extension."""
+    prior_hashed, new_hashed = _inc_image_twin_hashes(spark, sf_dir)
+    return incremental_image_from_hashes(prior_hashed.unionByName(new_hashed))
+
+
+def _inc_image_twin_hashes(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Twin #21's (static prior hashes, drained new-side hashes),
+    side-tagged."""
     prior_plants, new_plants = _inc_image_plants()
     d = (
         table(spark, sf_dir, "documents")
@@ -1525,7 +1504,7 @@ def stream_exec_dedup_incremental_image(
         "dhash",
         F.lit("p").alias("side"),
         _dhash_int().alias("dhash_int"),
-    ).persist()
+    )
 
     ps = _plant_stream(
         spark,
@@ -1542,21 +1521,12 @@ def stream_exec_dedup_incremental_image(
         )
     )
     drained = _drain_files(hash_stream, spark, "kawa_incimg_hashdrain_")
-    new_hashed = drained.select(
+    return prior_hashed, drained.select(
         "doc_id",
         "dhash",
         F.lit("n").alias("side"),
         _dhash_int().alias("dhash_int"),
     )
-    # the shared core checkpoints the bounded match set and releases
-    # its own band cache; the prior-hash cache releases here in a
-    # finally (the twin #20 lifecycle)
-    try:
-        return incremental_image_from_hashes(
-            prior_hashed.unionByName(new_hashed)
-        )
-    finally:
-        prior_hashed.unpersist()
 
 
 @register("stream_exec_quantile_sketch", oracle=QUANTILE_SKETCH_SQL)

@@ -12,16 +12,24 @@ a parallel Spark sum and a sequential DuckDB sum of decimals are
 bit-identical) and cast to DOUBLE only at the end; both engines then
 hold the identical IEEE value. See kawa_spark/functions/exact.py.
 
-Builder-side-effect contract (ADVICE r13): builders are normally
-cheap — they CONSTRUCT a lazy plan; execution happens when the caller
-acts on it. The exception is the CHECKPOINTING class (the self-join
-dedup keys dedup_ngram_jaccard / dedup_simhash / dedup_embedding_
-cosine / dedup_clusters / dedup_incremental_embedding /
-multimodal_image_dedup_near and the drain-backed stream_exec_* keys):
-those run a full Spark job at construction (localCheckpoint(eager=
-True) materializing a BOUNDED result, releasing corpus-sized caches
-in a finally). Tooling that sweeps QUERIES for schemas only should
-use the ``*_lazy`` twins where they exist, or accept the cost.
+Builder-side-effect contract: builders CONSTRUCT a lazy plan;
+execution happens when the caller acts on it. Two exceptions run Spark
+jobs at construction:
+
+* The drain-backed stream_exec_* keys drain their stream first.
+* The bindings that wrap their core in plans.materialize.materialize
+  (one cache-filling pass over the reused frames, then an eager
+  localCheckpoint of the BOUNDED result; caches released in a finally),
+  because their lazy tree measured slower at sf0.1 or 10×
+  (docs/SCALE.md, "Lazy cores and one materialize helper"):
+  dedup_minhash, dedup_ngram_jaccard (and dedup_clusters through its
+  edges), dedup_incremental_minhash, dedup_incremental_embedding,
+  similarity_containment, quality_lm_commonness and
+  stream_exec_dedup_incremental_minhash.
+
+Tooling that sweeps QUERIES for schemas only accepts that cost; a
+materialized key's lazy tree is its binding with the module's
+``materialize`` bound to the identity (tests/test_plan_audit.py).
 """
 
 from __future__ import annotations

@@ -22,6 +22,7 @@ import os
 import threading
 from collections.abc import Iterator
 from contextlib import contextmanager
+from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
 
@@ -52,6 +53,38 @@ def scoped_conf(spark: SparkSession, values: dict[str, str]) -> Iterator[None]:
                     spark.conf.unset(k)
                 else:
                     spark.conf.set(k, v)
+
+
+# Checkpoint file manager for checkpoints on the local filesystem.
+# Without Hadoop's native library the local filesystem shells out for
+# link status, so the session default (FileContext-based) renames each
+# checkpoint and state file through two spawned ``readlink``
+# processes; this manager renames with one rename(2). On ``file:``
+# paths it is no less atomic than the default: both check the
+# destination, refuse to overwrite it and then rename (docs/SCALE.md,
+# "One checkpoint-manager rule").
+FS_CHECKPOINT_MANAGER = {
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+}
+
+
+def checkpoint_conf(spark: SparkSession, location: str | None) -> dict[str, str]:
+    """Conf to scope into the ``start()`` of a streaming query that
+    checkpoints at ``location`` (None: the session's checkpoint root,
+    else Spark's local temp dir): ``FS_CHECKPOINT_MANAGER`` when the
+    checkpoint is on the local filesystem, nothing (the session
+    default) on any other scheme."""
+    location = location or spark.conf.get(
+        "spark.sql.streaming.checkpointLocation", None
+    )
+    scheme = urlparse(location).scheme if location else "file"
+    if not scheme:
+        default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS")
+        scheme = urlparse(default_fs or "file:///").scheme
+    return dict(FS_CHECKPOINT_MANAGER) if scheme == "file" else {}
 
 
 def _default_shuffle_partitions() -> str:

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from kawa_spark.session import checkpoint_conf, scoped_conf
 from kawa_spark.streaming.batcher import BatcherPolicy, make_foreach_batch
 
 
@@ -35,7 +36,9 @@ def _start(writer, trigger: str | None, checkpoint: str | None, available_now: b
         writer = writer.trigger(availableNow=True)
     elif trigger:
         writer = writer.trigger(processingTime=trigger)
-    return writer.start()
+    spark = writer._spark
+    with scoped_conf(spark, checkpoint_conf(spark, checkpoint)):
+        return writer.start()
 
 
 @dataclass

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kawa_spark.functions.exact import dec
-from kawa_spark.session import scoped_conf
+from kawa_spark.session import checkpoint_conf, scoped_conf
 
 
 def hourly_rollup(events: DataFrame) -> DataFrame:
@@ -117,7 +117,7 @@ def start_incremental_rollup(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("dt").parquet(path)
 
-    conf = {}
+    conf = checkpoint_conf(spark, checkpoint)
     if state_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(state_partitions)
     # the query snapshots the session conf at start(), so the scope

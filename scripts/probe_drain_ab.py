@@ -9,8 +9,8 @@ Variants, run alternately ``--reps`` times each after one warm-up pass:
 
 * ``parent``: the previous ``_drain`` — session-default checkpoint
   manager, state partitions as asked (8 by default).
-* ``manager``: the private checkpoint manager only, partitions as asked.
-* ``change``: the registered ``_drain`` — private checkpoint manager and
+* ``manager``: the FileSystem-based checkpoint manager only, partitions as asked.
+* ``change``: the registered ``_drain`` — FileSystem-based checkpoint manager and
   state partitions capped at the core count.
 
 Per variant and drain it prints, as medians over reps: wall seconds,
@@ -57,7 +57,11 @@ from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
 
 from kawa_spark import registry  # noqa: E402
 from kawa_spark.queries import streaming_mode  # noqa: E402
-from kawa_spark.session import get_spark, scoped_conf  # noqa: E402
+from kawa_spark.session import (  # noqa: E402
+    FS_CHECKPOINT_MANAGER,
+    get_spark,
+    scoped_conf,
+)
 
 KEYS = [
     "stream_exec_tumbling",
@@ -69,11 +73,11 @@ CLK_TCK = os.sysconf("SC_CLK_TCK")
 
 def _uncapped_drain(manager: bool):
     """``_drain`` without the state-store cap, with or without the
-    private checkpoint manager (without both: the previous form)."""
+    FileSystem-based checkpoint manager (without both: the previous form)."""
 
     def drain(df, spark, mode="append", state_partitions=8):
         name = f"q_{uuid.uuid4().hex[:10]}"
-        conf = dict(streaming_mode._PRIVATE_CHECKPOINT) if manager else {}
+        conf = dict(FS_CHECKPOINT_MANAGER) if manager else {}
         if state_partitions is not None:
             conf["spark.sql.shuffle.partitions"] = str(state_partitions)
         with scoped_conf(spark, conf):

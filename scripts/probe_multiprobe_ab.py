@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """A/B probe for the r16 multi-probe LSH vectorization: the retained
-pre-r16 Catalyst witness (_multiprobe_catalyst) vs the registered
+pre-r16 Catalyst witness (tests/witnesses.py::_multiprobe_catalyst) vs the registered
 vectorized form, same JVM, same build, both radii.
 
 Usage: python scripts/probe_multiprobe_ab.py [data_dir] [reps]
@@ -14,12 +14,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kawa_spark.queries.llm_similarity import (
-    _multiprobe_catalyst,
+from kawa_spark.queries.llm_similarity import (  # noqa: E402
     similarity_lsh_multiprobe,
     similarity_lsh_multiprobe_wide,
 )
-from kawa_spark.session import get_spark
+from kawa_spark.session import get_spark  # noqa: E402
+from tests.witnesses import _multiprobe_catalyst  # noqa: E402
 
 
 def main() -> None:

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""A/B probe for VERDICT r15 item 7: dedup_simhash's md5-per-occurrence
-bitsum stage (registered form) vs the distinct-term-dictionary Arrow
-stage (_simhash_bitsums_dict), at a synthetic scale-up.
+"""A/B probe for VERDICT r15 item 7: dedup_simhash's bitsum stages —
+md5 per occurrence and the distinct-term-dictionary Arrow stage (both
+witnesses in tests/witnesses.py) vs the registered distinct-pair
+precount — each through the lazy pair pipeline, at a synthetic scale-up.
 
 Usage: python scripts/probe_simhash_ab.py [data_dir] [reps]
        (default data_dir=/tmp/kawa_scale_probe, reps=2)
@@ -17,15 +18,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kawa_spark.io import spread, table
-from kawa_spark.queries.llm_dedup import (
-    _simhash_bitsums_dict,
-    _simhash_bitsums_occ,
+from kawa_spark.io import spread, table  # noqa: E402
+from kawa_spark.queries.llm_dedup import (  # noqa: E402
     _simhash_bitsums_precount,
     _simhash_pairs_from_bitsums,
-    dedup_simhash,
 )
-from kawa_spark.session import get_spark
+from kawa_spark.session import get_spark  # noqa: E402
+from tests.witnesses import (  # noqa: E402
+    _simhash_bitsums_dict,
+    _simhash_bitsums_occ,
+)
 
 
 def main() -> None:
@@ -35,15 +37,12 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    def dict_variant(spark, sf_dir):
-        d = spread(table(spark, sf_dir, "documents"), "doc_id")
-        return _simhash_pairs_from_bitsums(_simhash_bitsums_dict(d), True)
+    def variant(bitsums):
+        def run(spark, sf_dir):
+            d = spread(table(spark, sf_dir, "documents"), "doc_id")
+            return _simhash_pairs_from_bitsums(bitsums(d))
 
-    def precount_variant(spark, sf_dir):
-        d = spread(table(spark, sf_dir, "documents"), "doc_id")
-        return _simhash_pairs_from_bitsums(
-            _simhash_bitsums_precount(d), True
-        )
+        return run
 
     def best_of(fn, label):
         best = None
@@ -55,9 +54,9 @@ def main() -> None:
             best = dt if best is None else min(best, dt)
         return best
 
-    t_occ = best_of(dedup_simhash, "occ")
-    t_dict = best_of(dict_variant, "dict")
-    t_pre = best_of(precount_variant, "precount")
+    t_occ = best_of(variant(_simhash_bitsums_occ), "occ")
+    t_dict = best_of(variant(_simhash_bitsums_dict), "dict")
+    t_pre = best_of(variant(_simhash_bitsums_precount), "precount")
     print(
         f"occurrence-md5 {t_occ:8.2f}s  dict-arrow {t_dict:8.2f}s "
         f"({t_occ / t_dict:.2f}x)  precount-jvm {t_pre:8.2f}s "

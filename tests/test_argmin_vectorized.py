@@ -25,6 +25,7 @@ from pyspark.sql.types import (
 )
 
 import kawa_spark.queries.llm_similarity as S
+import tests.witnesses as W
 from kawa_spark.io import table
 
 SF = "/root/testdata/sf0.001"
@@ -65,7 +66,7 @@ def test_ivf_assign_bit_identical(spark):
     }
     old = {
         r["vec_id"]: (r["cell_id"], _bits(r["n_e"]))
-        for r in S._assign_cells_structmin(en, cents).collect()
+        for r in W._assign_cells_structmin(en, cents).collect()
     }
     assert new == old and len(new) == e.count()
 
@@ -79,7 +80,7 @@ def test_lloyd_assign_bit_identical(spark):
     }
     old = {
         r["vec_id"]: (r["cid"], _bits(r["d2"]))
-        for r in S._lloyd_assign_structmin(e, cents).collect()
+        for r in W._lloyd_assign_structmin(e, cents).collect()
     }
     assert new == old and len(new) == e.count()
 
@@ -119,7 +120,7 @@ def test_assign_tie_breaks_to_smallest_id(spark):
     }
     old = {
         r["vec_id"]: r["cid"]
-        for r in S._lloyd_assign_structmin(e, cents).collect()
+        for r in W._lloyd_assign_structmin(e, cents).collect()
     }
     assert new == old
     # the duplicate pair can only ever win as cid 5, never 9
@@ -144,7 +145,7 @@ def test_assign_zero_norm_vector_both_refuse(spark):
         F.col("n_e").alias("n_c"),
     )
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        S._assign_cells_structmin(en, cents).collect()
+        W._assign_cells_structmin(en, cents).collect()
     # the worker-side ArithmeticError surfaces as a PythonException;
     # match on the shared DIVIDE_BY_ZERO marker
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
@@ -177,7 +178,7 @@ def test_lloyd_assign_nan_input_matches(spark):
     }
     old = {
         r["vec_id"]: (r["cid"], math.isnan(r["d2"]))
-        for r in S._lloyd_assign_structmin(e, cents).collect()
+        for r in W._lloyd_assign_structmin(e, cents).collect()
     }
     assert new == old and len(new) == 6
     assert new[0] == (0, True)  # all-NaN row → smallest cid, NaN d2

@@ -226,7 +226,7 @@ def test_twin20_multibatch_drain_accumulates(spark, tmp_path):
         .parquet(str(src))
     )
     sig_stream = embedding_sigs(
-        stream.withColumn("side", F.lit("n")), persist=False
+        stream.withColumn("side", F.lit("n"))
     )
     out = tmp_path / f"emb_mb_drain_{uuid.uuid4().hex[:6]}"
     q = (
@@ -249,7 +249,6 @@ def test_twin20_multibatch_drain_accumulates(spark, tmp_path):
             spark.createDataFrame(
                 rows, "vec_id long, embedding array<double>"
             ).withColumn("side", F.lit("n")),
-            persist=False,
         ).collect()
     }
     assert drained == batch and len(batch) == 40
@@ -258,7 +257,7 @@ def test_twin20_multibatch_drain_accumulates(spark, tmp_path):
 def test_embedding_sig_core_composes_with_drained_stream(spark, tmp_path):
     """The banked twin-#20 shape, minus registration (the twin-#19
     pre-stage discipline): NEW-side sign-LSH sigs computed map-side
-    ON an embedding stream (persist=False), drained through the real
+    ON an embedding stream, drained through the real
     runtime via the parquet file sink, unioned with the static prior
     sig state, and fed to the sig-level core — must equal the banked
     batch binding exactly."""
@@ -294,7 +293,7 @@ def test_embedding_sig_core_composes_with_drained_stream(spark, tmp_path):
         "vec_id long, embedding array<double>"
     ).parquet(str(src))
     sig_stream = embedding_sigs(
-        stream.withColumn("side", F.lit("n")), persist=False
+        stream.withColumn("side", F.lit("n"))
     )
     out = tmp_path / f"emb_drain_{uuid.uuid4().hex[:6]}"
     q = (

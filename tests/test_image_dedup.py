@@ -6,6 +6,7 @@ misses)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 import kawa_spark.queries.llm_multimodal as M
 from tests.oracle_harness import compare
@@ -187,14 +188,16 @@ def test_incremental_image_matches_oracle_and_plants(spark):
             assert r["prior_id"] % 10 < INC_PRIOR_MOD  # prior side
 
 
-def test_incremental_image_lazy_twin_and_cache_release(spark):
-    """Family discipline from birth: the lazy twin passes the
+def test_incremental_image_lazy_core_and_cache_release(spark):
+    """Family discipline from birth: the lazy core passes the
     mechanical scale audit with no cartesian AND stays row-identical
-    to the checkpointing form; the checkpointing form leaves no
+    to the registered, materialized form; that form leaves no
     persist-callsite storage behind."""
     from kawa_spark.plans.audit import audit_plan
 
-    df = M.dedup_incremental_image_lazy(spark, SF)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(M, "materialize", lambda out, *reused: out, raising=False)
+        df = M.dedup_incremental_image(spark, SF)
     assert audit_plan(df) == []
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan

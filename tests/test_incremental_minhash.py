@@ -202,7 +202,7 @@ def test_twin19_multibatch_drain_accumulates(spark, tmp_path):
         .parquet(str(src))
     )
     sig_stream = minhash_signatures(
-        stream.withColumn("side", F.lit("n")), extra=("side",), persist=False
+        stream.withColumn("side", F.lit("n")), extra=("side",)
     )
     out = tmp_path / f"sig_drain_{uuid.uuid4().hex[:6]}"
     q = (
@@ -223,7 +223,6 @@ def test_twin19_multibatch_drain_accumulates(spark, tmp_path):
         (r["doc_id"], tuple(r["vh"]), tuple(r["mhs"]))
         for r in minhash_signatures(
             spark.createDataFrame(rows, "doc_id long, text string"),
-            persist=False,
         ).collect()
     }
     assert drained == batch and len(batch) == 40
@@ -231,7 +230,7 @@ def test_twin19_multibatch_drain_accumulates(spark, tmp_path):
 
 def test_sig_level_core_composes_with_drained_stream(spark, tmp_path):
     """The banked twin-#19 shape, minus registration: the NEW side's
-    signatures are computed map-side ON a stream (persist=False) and
+    signatures are computed map-side ON a stream and
     drained through the real runtime; the drained sigs union the
     static prior sig state and go through the sig-level core — the
     result must equal the registered batch key exactly."""
@@ -267,7 +266,6 @@ def test_sig_level_core_composes_with_drained_stream(spark, tmp_path):
     sig_stream = minhash_signatures(
         stream.withColumn("side", F.lit("n")),
         extra=("side",),
-        persist=False,
     )
     name = f"mh19_{uuid.uuid4().hex[:8]}"
     q = (

@@ -15,6 +15,7 @@ import struct as _struct
 import numpy as np
 
 import kawa_spark.queries.llm_similarity as S
+import tests.witnesses as W
 
 SF = "/root/testdata/sf0.001"
 
@@ -32,13 +33,13 @@ def _rows(df) -> dict:
 
 def test_multiprobe_bit_identical_radius1(spark):
     new = _rows(S._multiprobe_frame(spark, SF, radius=1))
-    old = _rows(S._multiprobe_catalyst(spark, SF, radius=1))
+    old = _rows(W._multiprobe_catalyst(spark, SF, radius=1))
     assert new == old and len(new) > 0
 
 
 def test_multiprobe_bit_identical_radius2(spark):
     new = _rows(S._multiprobe_frame(spark, SF, radius=S.WIDE_PROBE_RADIUS))
-    old = _rows(S._multiprobe_catalyst(spark, SF, radius=S.WIDE_PROBE_RADIUS))
+    old = _rows(W._multiprobe_catalyst(spark, SF, radius=S.WIDE_PROBE_RADIUS))
     assert new == old and len(new) > 0
 
 

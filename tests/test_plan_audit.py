@@ -742,18 +742,12 @@ def test_incremental_embedding_bucket_window_is_sig_keyed(spark):
     be a window PARTITIONED BY sig (bounded group sizes by the cap's
     own eviction), never a global window; and the new×prior pairing
     is an equi-join on sig — no cartesian anywhere. Audited through
-    the LAZY twin (dedup_incremental_embedding_lazy — the registered
-    key's exact expression tree minus the eager bounded checkpoint,
-    which collapses the executed plan to a Scan ExistingRDD and
-    would make every assertion here vacuous; code review r13
-    pass 2)."""
+    the key's lazy tree (_lazy_tree: an eager checkpoint collapses
+    the executed plan to a Scan ExistingRDD and would make every
+    assertion here vacuous)."""
     import re
 
-    from kawa_spark.queries.llm_similarity import (
-        dedup_incremental_embedding_lazy,
-    )
-
-    df = dedup_incremental_embedding_lazy(spark, SF)
+    df = _lazy_tree(spark, "dedup_incremental_embedding")
     assert audit_plan(df) == []
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
@@ -765,7 +759,7 @@ def test_incremental_embedding_bucket_window_is_sig_keyed(spark):
     specs = re.findall(r"windowspecdefinition\((\w+)", plan)
     assert specs, plan
     assert all(s == "sig" for s in specs), specs
-    # and the lazy twin must stay ROW-identical to the registered
+    # and the lazy tree must stay ROW-identical to the registered
     # binding, so the audited plan is the executed semantics
     lazy = sorted(tuple(r) for r in df.collect())
     reg = sorted(
@@ -790,41 +784,58 @@ def test_udtf_lateral_is_arrow_not_row_udtf(spark):
 
 
 # ---------------------------------------------------------------------------
-# r14: the persist-leak release (VERDICT r13 item 3) — the three
-# in-window self-join keys now eagerly checkpoint their bounded pair
-# sets and release the corpus-sized caches; plan audits read the LAZY
-# twins (the registered bindings collapse to Scan ExistingRDD).
+# The self-join keys that reuse a frame: each registered binding either
+# returns its lazy tree or wraps it in plans.materialize.materialize
+# (reused frames cached, the bounded result checkpointed eagerly, the
+# caches released). Plan audits read the lazy tree — an eager
+# checkpoint collapses the executed plan to a Scan ExistingRDD.
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize(
-    "key,lazy_path",
-    [
-        ("dedup_ngram_jaccard", "llm_dedup.dedup_ngram_jaccard_lazy"),
-        ("dedup_simhash", "llm_dedup.dedup_simhash_lazy"),
-        ("dedup_embedding_cosine", "llm_similarity.dedup_embedding_cosine_lazy"),
-    ],
-)
-def test_r14_checkpointing_keys_lazy_plans_clean(spark, key, lazy_path):
-    """Each r14 checkpointing key: (a) its lazy twin passes the
-    mechanical scale audit with no cartesian, and (b) the twin stays
-    ROW-identical to the registered binding, so the audited plan is
-    the executed semantics (the dedup_incremental_embedding_lazy
-    discipline)."""
-    import importlib
+def _lazy_tree(spark, key: str):
+    """``key``'s lazy tree: the registered binding, with its module's
+    ``materialize`` bound to the identity while it builds — for a
+    materialized key that is the core it wraps, for a lazy key the
+    binding itself."""
+    import sys
 
-    mod_name, fn_name = lazy_path.rsplit(".", 1)
-    mod = importlib.import_module(f"kawa_spark.queries.{mod_name}")
-    lazy_fn = getattr(mod, fn_name)
-    df = lazy_fn(spark, SF)
+    fn = registry.QUERIES[key]
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(
+            sys.modules[fn.__module__],
+            "materialize",
+            lambda out, *reused: out,
+            raising=False,
+        )
+        return fn(spark, SF)
+
+
+def _assert_lazy_plan_clean(spark, key: str, binding: str) -> None:
+    """(a) ``key``'s lazy tree passes the mechanical scale audit with
+    no cartesian, and (b) it stays ROW-identical to the registered
+    binding (``module.function``), so the audited plan is the executed
+    semantics."""
+    fn = registry.QUERIES[key]
+    assert f"{fn.__module__.rsplit('.', 1)[1]}.{fn.__name__}" == binding
+    df = _lazy_tree(spark, key)
     assert audit_plan(df) == []
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     lazy = sorted(tuple(r) for r in df.collect())
-    reg = sorted(
-        tuple(r) for r in registry.QUERIES[key](spark, SF).collect()
-    )
-    assert lazy == reg
+    reg = sorted(tuple(r) for r in fn(spark, SF).collect())
+    assert lazy == reg and reg
+
+
+@pytest.mark.parametrize(
+    "key,binding",
+    [
+        ("dedup_ngram_jaccard", "llm_dedup.dedup_ngram_jaccard"),
+        ("dedup_simhash", "llm_dedup.dedup_simhash"),
+        ("dedup_embedding_cosine", "llm_similarity.dedup_embedding_cosine"),
+    ],
+)
+def test_r14_checkpointing_keys_lazy_plans_clean(spark, key, binding):
+    _assert_lazy_plan_clean(spark, key, binding)
 
 
 def test_r14_checkpointing_keys_release_their_caches(spark):
@@ -850,50 +861,19 @@ def test_r14_checkpointing_keys_release_their_caches(spark):
         before = set(m.keys())
 
 
-# ---------------------------------------------------------------------------
-# r15: the minhash-core persist release (VERDICT r14 item 2) — the
-# two in-window minhash keys now eagerly checkpoint their bounded
-# pair sets and release the signature/band caches; plus the new
-# registration dedup_incremental_image (checkpoint-clean from birth).
-# Plan audits read the LAZY twins (the registered bindings collapse
-# to Scan ExistingRDD).
-# ---------------------------------------------------------------------------
-
-
 @pytest.mark.parametrize(
-    "key,lazy_path",
+    "key,binding",
     [
-        ("dedup_minhash", "llm_dedup.dedup_minhash_lazy"),
-        (
-            "dedup_incremental_minhash",
-            "llm_dedup.dedup_incremental_minhash_lazy",
-        ),
+        ("dedup_minhash", "llm_dedup.dedup_minhash"),
+        ("dedup_incremental_minhash", "llm_dedup.dedup_incremental_minhash"),
         (
             "dedup_incremental_image",
-            "llm_multimodal.dedup_incremental_image_lazy",
+            "llm_multimodal.dedup_incremental_image",
         ),
     ],
 )
-def test_r15_checkpointing_keys_lazy_plans_clean(spark, key, lazy_path):
-    """Each r15 checkpointing key: (a) its lazy twin passes the
-    mechanical scale audit with no cartesian, and (b) the twin stays
-    ROW-identical to the registered binding, so the audited plan is
-    the executed semantics (the dedup_ngram_jaccard_lazy
-    discipline)."""
-    import importlib
-
-    mod_name, fn_name = lazy_path.rsplit(".", 1)
-    mod = importlib.import_module(f"kawa_spark.queries.{mod_name}")
-    lazy_fn = getattr(mod, fn_name)
-    df = lazy_fn(spark, SF)
-    assert audit_plan(df) == []
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, plan
-    lazy = sorted(tuple(r) for r in df.collect())
-    reg = sorted(
-        tuple(r) for r in registry.QUERIES[key](spark, SF).collect()
-    )
-    assert lazy == reg and reg
+def test_r15_checkpointing_keys_lazy_plans_clean(spark, key, binding):
+    _assert_lazy_plan_clean(spark, key, binding)
 
 
 def test_r15_checkpointing_keys_release_their_caches(spark):
@@ -924,14 +904,15 @@ def test_r15_checkpointing_keys_release_their_caches(spark):
 
 
 # ---------------------------------------------------------------------------
-# r15 (VERDICT r14 item 5): the eager checkpoint must not have added
-# a second CORPUS read on the verify side of the released keys. The
-# registered bodies' RETURNED plans are audit-blinded (Scan
+# r15 (VERDICT r14 item 5): the build must read each corpus input
+# once. A materialized key's RETURNED plan is audit-blinded (Scan
 # ExistingRDD), but the checkpoint JOB itself executes the real plan
 # — a localCheckpoint spy captures it. In that plan, every printed
 # `Scan parquet` inside an InMemoryRelation rendering is the cached
 # plan's echo (built once); a scan OUTSIDE any InMemoryRelation is a
-# genuine extra disk read of the corpus. Pin: zero such scans.
+# genuine extra disk read of the corpus. Pin: zero such scans. A lazy
+# key's final adaptive plan must read each input once, the second
+# self-join side through a ReusedExchange.
 # ---------------------------------------------------------------------------
 
 
@@ -948,7 +929,7 @@ def _raw_scans_outside_cache(jnode, out: list[str]) -> None:
     reset indentation), so scan-line counts overcount by the number
     of cache references."""
     name = jnode.getClass().getSimpleName()
-    if "InMemoryTableScan" in name:
+    if "InMemoryTableScan" in name or "ReusedExchange" in name:
         return
     if "FileSourceScan" in name:
         out.append(str(jnode.simpleString(100)))
@@ -962,6 +943,16 @@ def _raw_scans_outside_cache(jnode, out: list[str]) -> None:
     it = jnode.children().iterator()
     while it.hasNext():
         _raw_scans_outside_cache(it.next(), out)
+
+
+# Raw corpus reads of one self-join side of each lazy key:
+# dedup_embedding_cosine's corpus unions the table with two reads of
+# its planted seeds.
+_LAZY_SCANS = {
+    "dedup_simhash": 1,
+    "dedup_embedding_cosine": 3,
+    "dedup_incremental_image": 1,
+}
 
 
 @pytest.mark.parametrize(
@@ -978,12 +969,23 @@ def _raw_scans_outside_cache(jnode, out: list[str]) -> None:
 def test_checkpoint_job_reads_each_corpus_input_once(
     spark, key, monkeypatch
 ):
-    """The checkpoint job's executed plan reads the corpus only to
-    build the persisted input caches: both self-join sides (and the
-    verify leg) consume InMemoryTableScan, never a second raw
-    parquet scan of documents/embeddings."""
+    """A materialized key's checkpoint job reads the corpus only to
+    build the cached input frames: both self-join sides (and the
+    verify leg) consume InMemoryTableScan, never a second raw parquet
+    scan of documents/embeddings. A lazy key's executed plan scans
+    each input once."""
     from pyspark.sql.classic.dataframe import DataFrame as _CDF
 
+    fn = registry.QUERIES[key]
+    if "materialize" not in fn.__code__.co_names:
+        df = fn(spark, SF)
+        df.collect()  # AQE shows ReusedExchange in the final plan only
+        raw: list[str] = []
+        _raw_scans_outside_cache(df._jdf.queryExecution().executedPlan(), raw)
+        # the second self-join side reads through a ReusedExchange;
+        # without reuse each count doubles
+        assert len(raw) == _LAZY_SCANS[key], (key, raw)
+        return
     orig = _CDF.localCheckpoint
     captured: list[str] = []
 
@@ -1003,58 +1005,29 @@ def test_checkpoint_job_reads_each_corpus_input_once(
         assert "InMemoryTableScan" in jplan.toString(), key
 
 
-# ---------------------------------------------------------------------------
-# r15 OPTIMIZATION round: the LAST legacy persist-without-release
-# forms took the checkpoint/serialize/release pattern —
-# quality_lm_commonness, similarity_containment, dedup_lsh_recall,
-# and twin #19's core call. Plan audits read the new LAZY twins (the
-# registered bindings collapse to Scan ExistingRDD).
-# ---------------------------------------------------------------------------
-
-
 @pytest.mark.parametrize(
-    "key,lazy_path",
+    "key,binding",
     [
-        ("quality_lm_commonness", "llm_quality.quality_lm_commonness_lazy"),
-        ("similarity_containment", "llm_corpus.similarity_containment_lazy"),
-        ("dedup_lsh_recall", "llm_dedup.dedup_lsh_recall_lazy"),
+        ("quality_lm_commonness", "llm_quality.quality_lm_commonness"),
+        ("similarity_containment", "llm_corpus.similarity_containment"),
+        ("dedup_lsh_recall", "llm_dedup.dedup_lsh_recall"),
     ],
 )
-def test_r15_opt_checkpointing_keys_lazy_plans_clean(spark, key, lazy_path):
-    """Each key released in the r15 optimization round: (a) its lazy
-    twin passes the mechanical scale audit with no cartesian, and
-    (b) the twin stays ROW-identical to the registered binding, so
-    the audited plan is the executed semantics (the
-    dedup_ngram_jaccard_lazy discipline)."""
-    import importlib
-
-    mod_name, fn_name = lazy_path.rsplit(".", 1)
-    mod = importlib.import_module(f"kawa_spark.queries.{mod_name}")
-    lazy_fn = getattr(mod, fn_name)
-    df = lazy_fn(spark, SF)
-    assert audit_plan(df) == []
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, plan
-    lazy = sorted(tuple(r) for r in df.collect())
-    reg = sorted(
-        tuple(r) for r in registry.QUERIES[key](spark, SF).collect()
-    )
-    assert lazy == reg and reg
+def test_r15_opt_checkpointing_keys_lazy_plans_clean(spark, key, binding):
+    _assert_lazy_plan_clean(spark, key, binding)
 
 
 def test_r15_opt_checkpointing_keys_release_their_caches(spark):
-    """After each newly-checkpointing builder returns, no
-    ``persist()`` cache remains — only bounded localCheckpoint
-    blocks (dedup_lsh_recall leaves two: the minhash leg's pair set
-    and the marked-pair table; the others one). Twin #19 is included:
-    it now runs the checkpointing core and releases its prior-sig
-    cache (the twin #20 lifecycle)."""
+    """After each builder returns, no ``persist()`` cache remains —
+    at most the one bounded localCheckpoint block of a materialized
+    key. Twin #19 is included: its prior-sig cache sits under the
+    band cache and is released with it."""
     sc = spark.sparkContext
     before = set(sc._jsc.getPersistentRDDs().keys())
     for key, max_blocks in (
         ("quality_lm_commonness", 1),
         ("similarity_containment", 1),
-        ("dedup_lsh_recall", 2),
+        ("dedup_lsh_recall", 1),
         ("stream_exec_dedup_incremental_minhash", 1),
     ):
         registry.QUERIES[key](spark, SF)

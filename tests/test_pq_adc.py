@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 import kawa_spark.queries.llm_similarity as S
+import tests.witnesses as W
 from tests.oracle_harness import compare
 
 SF = "/root/testdata/sf0.001"
@@ -50,7 +51,7 @@ def test_vectorized_topk_bit_identical(spark):
     key would test the vectorized form against itself (ADVICE
     r14)."""
     jvm = sorted(
-        tuple(r) for r in S._similarity_topk_catalyst(spark, SF).collect()
+        tuple(r) for r in W._similarity_topk_catalyst(spark, SF).collect()
     )
     vec = sorted(
         tuple(r) for r in S.similarity_topk_vectorized(spark, SF).collect()
@@ -95,14 +96,14 @@ def test_vectorized_topk_zero_norm_is_loud_in_both_forms(spark, tmp_path):
     # the same string would make these legs vacuous (ADVICE r14).
     sf_cand = write_sf("zn_cand", {17})
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        S._similarity_topk_catalyst(spark, sf_cand).collect()
+        W._similarity_topk_catalyst(spark, sf_cand).collect()
     with pytest.raises(Exception, match="zero-norm"):
         S.similarity_topk_vectorized(spark, sf_cand).collect()
 
     # zero-norm QUERY (vec_id < N_QUERIES) — guarded driver-side
     sf_q = write_sf("zn_query", {3})
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        S._similarity_topk_catalyst(spark, sf_q).collect()
+        W._similarity_topk_catalyst(spark, sf_q).collect()
     with pytest.raises(ArithmeticError, match="zero-norm query"):
         S.similarity_topk_vectorized(spark, sf_q)
 
@@ -111,7 +112,7 @@ def test_vectorized_topk_zero_norm_is_loud_in_both_forms(spark, tmp_path):
     sf_ok = write_sf("zn_none", set())
     jvm = sorted(
         tuple(r)
-        for r in S._similarity_topk_catalyst(spark, sf_ok).collect()
+        for r in W._similarity_topk_catalyst(spark, sf_ok).collect()
     )
     vec = sorted(
         tuple(r) for r in S.similarity_topk_vectorized(spark, sf_ok).collect()

@@ -1,7 +1,8 @@
 """Session conf swaps: scoped_conf restores what it changed, under
 failure and under concurrent drains, and no module outside session.py
-swaps session-global conf by hand. A bounded drain's private
-checkpoint manager and its state-store cap stay inside the drain."""
+swaps session-global conf by hand. The checkpoint file manager
+follows the checkpoint's scheme and never outlives a query's start();
+a bounded drain's state-store cap stays inside the drain."""
 
 from __future__ import annotations
 
@@ -14,8 +15,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
-from kawa_spark.queries.streaming_mode import _PRIVATE_CHECKPOINT, _drain
-from kawa_spark.session import scoped_conf
+from kawa_spark.queries.streaming_mode import _drain
+from kawa_spark.session import FS_CHECKPOINT_MANAGER, checkpoint_conf, scoped_conf
 from kawa_spark.sinks import RoutingSink
 
 PARTS = "spark.sql.shuffle.partitions"
@@ -194,33 +195,66 @@ class _SessionConf:
         self.seen.append(df.sparkSession.conf.get(MANAGER, None))
 
 
-def test_durable_checkpoint_keeps_default_manager_after_drain(spark, tmp_path):
-    """The private manager never outlives a drain's start(): a
-    checkpointed RoutingSink started right after a drain runs on the
-    session default."""
+def test_checkpoint_manager_follows_checkpoint_scheme(spark, tmp_path):
+    """Every streaming start() scopes the FileSystem-based checkpoint
+    manager for a checkpoint on the local filesystem (a path, a
+    ``file:`` URI, or Spark's local temp checkpoint) and the session
+    default for any other scheme; the session never keeps it after
+    start()."""
+    assert checkpoint_conf(spark, str(tmp_path / "cp")) == FS_CHECKPOINT_MANAGER
+    assert checkpoint_conf(spark, f"file://{tmp_path}/cp") == FS_CHECKPOINT_MANAGER
+    assert checkpoint_conf(spark, None) == FS_CHECKPOINT_MANAGER
+    assert checkpoint_conf(spark, "s3a://bucket/cp") == {}
+    assert checkpoint_conf(spark, "hdfs://nn:8020/cp") == {}
+    root = "spark.sql.streaming.checkpointLocation"
+    with scoped_conf(spark, {root: "hdfs://nn:8020/checkpoints"}):
+        assert checkpoint_conf(spark, None) == {}
+
     spark.range(40).select((F.col("id") % 4).alias("k")).write.parquet(
         str(tmp_path / "src")
     )
     src = spark.readStream.schema("k long").parquet(str(tmp_path / "src"))
-
-    def start(cp):
-        sink = _SessionConf()
-        q = RoutingSink(route_col="k", routes={}, default=sink).start_stream(
-            src.select(F.col("k").cast("string").alias("k")),
-            checkpoint=str(tmp_path / cp),
-            available_now=True,
-        )
-        return q, sink
-
     _drain(_counts(spark, tmp_path / "src"), spark, mode="complete")
     assert spark.conf.get(MANAGER, None) is None
-    q, sink = start("cp")
+    # a durable checkpointed RoutingSink on a local path: its query
+    # runs under the manager, the session does not keep it
+    sink = _SessionConf()
+    q = RoutingSink(route_col="k", routes={}, default=sink).start_stream(
+        src.select(F.col("k").cast("string").alias("k")),
+        checkpoint=str(tmp_path / "cp"),
+        available_now=True,
+    )
     assert q.awaitTermination(120)
-    assert sink.seen == [None]
+    assert sink.seen == [FS_CHECKPOINT_MANAGER[MANAGER]]
     assert spark.conf.get(MANAGER, None) is None
 
-    # the sink does see a manager its query was started under
-    with scoped_conf(spark, _PRIVATE_CHECKPOINT):
-        q, sink = start("cp2")
-    assert q.awaitTermination(120)
-    assert sink.seen == [_PRIVATE_CHECKPOINT[MANAGER]]
+
+@pytest.mark.parametrize(
+    "manager",
+    ["FileSystemBasedCheckpointFileManager", "FileContextBasedCheckpointFileManager"],
+)
+def test_checkpoint_managers_refuse_to_overwrite_offsets(spark, tmp_path, manager):
+    """On ``file:`` the FileSystem-based manager is as safe as the
+    FileContext-based default: with overwriteIfPossible=false neither
+    replaces an existing ``offsets/N``."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    offsets = jvm.org.apache.hadoop.fs.Path(f"file://{tmp_path}/offsets")
+    cls = getattr(
+        jvm.org.apache.spark.sql.execution.streaming.checkpointing, manager
+    )
+    fm = cls(offsets, conf)
+    fm.mkdirs(offsets)
+    first = jvm.org.apache.hadoop.fs.Path(offsets, "0")
+
+    def write(data: bytes, overwrite: bool):
+        out = fm.createAtomic(first, overwrite)
+        out.write(bytearray(data))
+        out.close()
+
+    write(b"v1", False)
+    with pytest.raises(Py4JJavaError, match="FileAlreadyExists"):
+        write(b"v2", False)
+    assert (tmp_path / "offsets" / "0").read_bytes() == b"v1"

@@ -9,6 +9,7 @@ row-identical by construction — checked end-to-end anyway.
 from __future__ import annotations
 
 import kawa_spark.queries.llm_dedup as D
+import tests.witnesses as W
 from kawa_spark.io import table
 
 SF = "/root/testdata/sf0.001"
@@ -18,11 +19,11 @@ def test_bitsum_stages_integer_identical(spark):
     d = table(spark, SF, "documents")
     occ = {
         r["doc_id"]: tuple(r)[1:]
-        for r in D._simhash_bitsums_occ(d).collect()
+        for r in W._simhash_bitsums_occ(d).collect()
     }
     dic = {
         r["doc_id"]: tuple(r)[1:]
-        for r in D._simhash_bitsums_dict(d).collect()
+        for r in W._simhash_bitsums_dict(d).collect()
     }
     pre = {
         r["doc_id"]: tuple(r)[1:]
@@ -36,13 +37,13 @@ def test_pipelines_row_identical(spark):
     a = {
         (r["doc_a"], r["doc_b"], r["hamming"])
         for r in D._simhash_pairs_from_bitsums(
-            D._simhash_bitsums_occ(d), checkpoint=False
+            W._simhash_bitsums_occ(d)
         ).collect()
     }
     b = {
         (r["doc_a"], r["doc_b"], r["hamming"])
         for r in D._simhash_pairs_from_bitsums(
-            D._simhash_bitsums_dict(d), checkpoint=False
+            W._simhash_bitsums_dict(d)
         ).collect()
     }
     assert a == b
