@@ -1675,16 +1675,12 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     kawa parity: none; mandate (M) LLM-pipeline extension.
 
-    The registered form is the lazy tree: the four branches over the
-    universe (the minhash leg, posts a/b and sizes) share its
-    exchanges through AQE reuse, and the tree beat the materialized
-    form at sf0.1 and 10× (docs/SCALE.md, "Lazy cores")."""
-    return lsh_recall_report(lsh_audit_universe(spark, sf_dir))
-
-
-def lsh_audit_universe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_lsh_recall's audit universe: the md5-rank hash sample of
-    ~AUDIT_SAMPLE_TARGET documents plus the plants."""
+    The registered form materializes the marked-pair table (it feeds
+    both the totals and the rows) with the universe and the minhash
+    leg's signature and band tables cached for the build
+    (plans.materialize): one count of the band rows fills all three,
+    and the lazy tree re-runs the sample scan and the signature stage
+    per branch (docs/SCALE.md, "Lazy cores")."""
     d = spread(table(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id", "text"
     )
@@ -1698,23 +1694,33 @@ def lsh_audit_universe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(md5_long(F.col("doc_id")) % F.col("s_mod") == 0)
         .drop("s_mod")
     )
-    return sampled.unionByName(
+    universe = sampled.unionByName(
         spark.createDataFrame(LSH_RECALL_PLANTS, "doc_id long, text string")
     )
+    sig = minhash_signatures(universe)
+    banded = minhash_band_rows(sig)
+    marked = lsh_marked_pairs(universe, minhash_band_pairs(sig, banded))
+    return lsh_recall_totals(materialize(marked, universe, sig, banded))
 
 
 def lsh_recall_report(universe: DataFrame) -> DataFrame:
     """The found/missed marking + recall over ANY (doc_id, text)
-    audit universe — the registered key binds the hash-sampled
-    corpus + plants; the property test
+    audit universe, as a lazy tree — the registered key binds the
+    hash-sampled corpus + plants and materializes the same pieces;
+    the property test
     (tests/test_lsh_recall.py::test_lsh_recall_core_matches_hashlib_reference)
     drives random graded-similarity corpora against a pure-hashlib
-    minhash + posting-dict reference. The marked-pair table feeds
-    both the total aggregate and the final projection; AQE reuses its
-    exchanges, so the lazy tree runs the audit pipeline once."""
-    mh = minhash_pairs(universe).select(
-        "doc_a", "doc_b", F.lit(True).alias("mh_found")
+    minhash + posting-dict reference."""
+    return lsh_recall_totals(
+        lsh_marked_pairs(universe, minhash_pairs(universe))
     )
+
+
+def lsh_marked_pairs(universe: DataFrame, mh: DataFrame) -> DataFrame:
+    """Exact ground-truth pairs (uncapped posting self-join, jaccard ≥
+    GT_JACCARD) marked ``found`` where the minhash pairs ``mh`` hold
+    them → (doc_a, doc_b, jaccard, found)."""
+    mh = mh.select("doc_a", "doc_b", F.lit(True).alias("mh_found"))
     posts = universe.select(
         "doc_id", F.explode(_shingle_hashes(F.col("text"))).alias("s")
     )
@@ -1748,12 +1754,17 @@ def lsh_recall_report(universe: DataFrame) -> DataFrame:
         .select("doc_a", "doc_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= GT_JACCARD)
     )
-    marked = gt.join(mh, ["doc_a", "doc_b"], "left").select(
+    return gt.join(mh, ["doc_a", "doc_b"], "left").select(
         "doc_a",
         "doc_b",
         "jaccard",
         F.coalesce(F.col("mh_found"), F.lit(False)).alias("found"),
     )
+
+
+def lsh_recall_totals(marked: DataFrame) -> DataFrame:
+    """Marked pairs + the corpus-level (gt_pairs, found_pairs,
+    recall) on every row."""
     tot = marked.agg(
         F.count(F.lit(1)).cast("long").alias("gt_pairs"),
         F.sum(F.col("found").cast("int")).cast("long").alias("found_pairs"),

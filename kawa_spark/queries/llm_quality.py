@@ -291,10 +291,11 @@ def quality_lm_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
       the same one double division — but the aggregate now reads the
       small per-doc frame, eliminating the third consumer of the
       corpus-sized postings and the duplicate count-table subtree.
-    * The registered form materializes the output (|docs| rows — the
-      per-doc table's own cardinality, not the posting table's) with
-      the postings cached for the build (plans.materialize;
-      docs/SCALE.md, "Lazy cores")."""
+    * The registered form materializes the per-doc table (|docs|
+      rows — the output's own cardinality, not the posting table's)
+      with the postings cached for the build (plans.materialize;
+      docs/SCALE.md, "Lazy cores"), so the output and the corpus norm
+      both read the checkpoint."""
     from kawa_spark.functions.hof import bigrams, bind
 
     d = spread(table(spark, sf_dir, "documents"), "doc_id")
@@ -304,13 +305,14 @@ def quality_lm_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
     bg_col = bind(F.split(F.lower(F.col("text")), " "), bigrams)
     posts = d.select("doc_id", F.explode(bg_col).alias("bg"))
     counts = posts.groupBy("bg").agg(F.count(F.lit(1)).alias("n_bg"))
-    scored = (
+    scored = materialize(
         posts.join(counts, "bg")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.sum("n_bg").alias("sum_commonness"),
-        )
+        ),
+        posts,
     )
     # Σ_docs sum_commonness == Σ_b n_b², Σ_docs n_bigrams == Σ_b n_b:
     # identical integers to the old counts-table aggregate, summed in
@@ -325,7 +327,7 @@ def quality_lm_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     avg = F.col("sum_commonness").cast("double") / F.col("n_bigrams")
     ratio = avg / F.col("corpus_avg")
-    out = scored.crossJoin(F.broadcast(corpus)).select(
+    return scored.crossJoin(F.broadcast(corpus)).select(
         "doc_id",
         "n_bigrams",
         "sum_commonness",
@@ -333,4 +335,3 @@ def quality_lm_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
         ratio.alias("commonness_ratio"),
         (ratio >= 0.5).alias("keep"),
     )
-    return materialize(out, posts)

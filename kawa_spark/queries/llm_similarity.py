@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kawa_spark.io import table, spread
-from kawa_spark.plans.materialize import materialize
 from kawa_spark.registry import register
 
 N_QUERIES = 10
@@ -1067,10 +1066,13 @@ def dedup_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     new side, then the new×prior sign-LSH bucket join with exact
     left-fold cosine ≥ 0.9 verify (incremental_embedding_matches —
     combined-population EMB_BUCKET_CAP, never quadratic). Oracle:
-    _inc_embedding_oracle."""
-    prior, newb = _inc_embedding_inputs(spark, sf_dir)
-    e = embedding_sigs(_side_tagged(prior, newb))
-    return materialize(incremental_embedding_from_sigs(e), e)
+    _inc_embedding_oracle.
+
+    The registered form is the lazy tree: AQE reuses the sig window's
+    exchange for the prior side, and the tree was no slower than
+    caching the sigs and checkpointing at sf0.1 and 10× (docs/SCALE.md,
+    "Lazy cores")."""
+    return incremental_embedding_matches(*_inc_embedding_inputs(spark, sf_dir))
 
 
 @register(

@@ -23,7 +23,7 @@ jobs at construction:
   because their lazy tree measured slower at sf0.1 or 10×
   (docs/SCALE.md, "Lazy cores and one materialize helper"):
   dedup_minhash, dedup_ngram_jaccard (and dedup_clusters through its
-  edges), dedup_incremental_minhash, dedup_incremental_embedding,
+  edges), dedup_incremental_minhash, dedup_lsh_recall,
   similarity_containment, quality_lm_commonness and
   stream_exec_dedup_incremental_minhash.
 

@@ -23,8 +23,8 @@ equal, and the CacheManager must be empty after every run.
 
 Usage: python scripts/probe_materialize_ab.py [--sf-dir DIR] [--reps 3]
        [key ...]
-       (``--sf-dir`` takes /root/testdata/sf0.1 or the 10x tree
-        ``scripts/scale_probe.py`` builds)
+       (``--sf-dir`` takes the sf0.1 testdata, the default, or the
+        10x tree ``scripts/scale_probe.py`` builds)
 """
 
 from __future__ import annotations
@@ -86,11 +86,12 @@ def _incremental_image(spark, sf_dir):
     return materialize(M.incremental_image_from_bands(sized), sized)
 
 
-def _lsh_recall(spark, sf_dir):
-    from kawa_spark.queries import llm_dedup as D
+def _incremental_embedding(spark, sf_dir):
+    from kawa_spark.queries import llm_similarity as S
 
-    universe = D.lsh_audit_universe(spark, sf_dir)
-    return materialize(D.lsh_recall_report(universe), universe)
+    prior, newb = S._inc_embedding_inputs(spark, sf_dir)
+    e = S.embedding_sigs(S._side_tagged(prior, newb))
+    return materialize(S.incremental_embedding_from_sigs(e), e)
 
 
 def _image_near(spark, sf_dir):
@@ -122,7 +123,7 @@ MATERIALIZED = {
     "dedup_simhash": _simhash,
     "dedup_embedding_cosine": _embedding_cosine,
     "dedup_incremental_image": _incremental_image,
-    "dedup_lsh_recall": _lsh_recall,
+    "dedup_incremental_embedding": _incremental_embedding,
     "multimodal_image_dedup_near": _image_near,
     "stream_exec_dedup_incremental_embedding": _twin_embedding,
     "stream_exec_dedup_incremental_image": _twin_image,

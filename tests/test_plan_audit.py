@@ -715,11 +715,8 @@ def test_quantile_sketch_bottom_k_is_window_group_limit(spark):
 )
 def test_r13_plans_clean(spark, key):
     """Round-13 registrations pass the mechanical scale audit.
-    dedup_incremental_embedding is audited separately through its
-    LAZY twin — the registered binding eagerly checkpoints its
-    bounded output, which collapses the executed plan to a Scan
-    ExistingRDD that audit_plan cannot see into (code review r13
-    pass 2)."""
+    dedup_incremental_embedding is audited separately
+    (test_incremental_embedding_bucket_window_is_sig_keyed)."""
     df = registry.QUERIES[key](spark, SF)
     assert audit_plan(df) == []
 
