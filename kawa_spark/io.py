@@ -38,8 +38,9 @@ def _normalize_ts(df: DataFrame) -> DataFrame:
     RANGE frames, unix_micros) requires plain TIMESTAMP, so normalize all
     of them here — the single choke point every reader goes through:
 
-    - parquet TIMESTAMP(NANOS): read as bigint via the legacy
-      ``nanosAsLong`` conf, truncate ns→µs (DuckDB semantics).
+    - parquet TIMESTAMP(NANOS): read as bigint under the legacy
+      ``nanosAsLong`` conf (``get_spark`` sessions carry it; the readers
+      never set it), truncate ns→µs (DuckDB semantics).
     - untimezoned ``timestamp[us]``: Spark 4 infers TIMESTAMP_NTZ; cast to
       TIMESTAMP. Session timezone is pinned UTC (session.py), so the cast
       reinterprets identical micros — lossless and oracle-neutral.
@@ -129,15 +130,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # at the CPU-bound call sites that profiling justified.
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    if name == "events":
-        # Legacy flag for the nanos-era encoding; harmless otherwise.
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass  # static conf on some builds; session default covers it
-        df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
-        return _normalize_ts(df)
-    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    return _normalize_ts(df) if name == "events" else df
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -197,11 +191,6 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             except FileExistsError:
                 pass  # concurrent staging of the same table
 
-    if name == "events":
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
     df = spark.readStream.schema(_parquet_schema(spark, stage)).parquet(stage)
     if name == "events":
         df = _normalize_ts(df)

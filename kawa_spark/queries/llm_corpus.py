@@ -304,8 +304,11 @@ def similarity_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     first r15 form cached it for the verify sides too, which fed the
     planner accurate (large) in-memory statistics and flipped every
     verify join from broadcast to sort-merge — shuffling the
-    candidate pairs' shingle ARRAYS twice, measured 57 s → 232 s at
-    the 10× probe. The verify sides read the lazy scan (shingling a
+    candidate pairs' shingle ARRAYS twice, which the 10× probe read
+    as the slowest form (docs/SCALE.md, "similarity_containment
+    strategy fix"; the current 10× row is in "Lazy cores and one
+    materialize helper").
+    The verify sides read the lazy scan (shingling a
     candidate-verify pass is cheaper than shuffling arrays; at real
     scale the planner's parquet-based estimates pick the robust
     strategy).

@@ -118,6 +118,21 @@ def _default_shuffle_partitions() -> str:
     return str(max(32, n))
 
 
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's ``MemTotal`` in whole GiB, between 1g and 16g.
+
+    Local mode runs the executors inside the driver JVM, and the JVM
+    also needs memory beyond its heap, as do the Python workers: a 16g
+    heap on a 15 GiB host let the JVM grow until the kernel killed it
+    (a 10x scale probe). 16g when ``MemTotal`` cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            kib = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "16g"
+    return f"{min(16, max(1, kib // 2 // (1 << 20)))}g"
+
+
 DEFAULT_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
@@ -125,8 +140,9 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.filterPushdown": "true",
-    # events.ts is parquet TIMESTAMP(NANOS); Spark reads it as long
-    # with this flag and kawa_spark.io converts to a µs timestamp.
+    # nanos-era testdata encoded events.ts as parquet TIMESTAMP(NANOS);
+    # Spark reads it as long with this flag and kawa_spark.io converts
+    # to a µs timestamp (today's testdata is timestamp[us]).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.files.maxPartitionBytes": "134217728",
     # Broadcast threshold: 32 MB — the TPC-H dims (region/nation/
@@ -151,7 +167,9 @@ DEFAULT_CONF: dict[str, str] = {
     # measured: a 10x sf0.1 scale probe OOM-killed the JVM. Heap must
     # be set before JVM launch, so it only applies to sessions this
     # factory creates (a cluster deployment sizes executors instead).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    "spark.driver.memory": (
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
+    ),
     "spark.driver.maxResultSize": "4g",
 }
 

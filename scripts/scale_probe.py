@@ -14,10 +14,11 @@ exactly like a real scale-up):
 - embeddings: vec_id-shifted copies with a per-copy dimension nudge
 - region/nation/customer/supplier/part: copied as-is (dimensions)
 
-Then times a cross-section of headline queries and prints a table:
-the 10× wall-time ratio is the evidence for the "would this survive
-100×?" question — plans whose ratio tracks data growth (≤ ~10×) are
-scan/shuffle-bound with no superlinear term.
+Then times a cross-section of headline queries through
+``scripts/ab.py``'s protocol, the two scales as variants (outputs not
+compared): a 10× wall ratio that tracks data growth (≤ ~10×) marks a
+scan/shuffle-bound plan with no superlinear term. The build is stamped
+with K and the source files' stats and reused only while both match.
 
 Usage: python scripts/scale_probe.py [K] [query ...]
        (default K=10, all PROBES; name queries to probe a subset —
@@ -26,18 +27,21 @@ Usage: python scripts/scale_probe.py [K] [query ...]
 
 from __future__ import annotations
 
+import json
 import os
+import pathlib
 import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+from ab import measure, query  # also puts the repo root on sys.path
 from kawa_spark import registry
 from kawa_spark.session import get_spark
 
 SRC = "/root/testdata/sf0.1"
 DST = "/tmp/kawa_scale_probe"
+STAMP = os.path.join(DST, ".build_stamp.json")
+REPS = 2
 
 PROBES = [
     "agg_hash_groupby",
@@ -68,8 +72,7 @@ PROBES = [
 def build(spark, k: int) -> None:
     from pyspark.sql import functions as F
 
-    if os.path.isdir(DST):
-        shutil.rmtree(DST)
+    shutil.rmtree(DST, ignore_errors=True)
     os.makedirs(DST)
     for dim in ("region", "nation", "customer", "supplier", "part"):
         shutil.copy(f"{SRC}/{dim}.parquet", f"{DST}/{dim}.parquet")
@@ -79,9 +82,7 @@ def build(spark, k: int) -> None:
         # k-way union chain (k=100 unions made planning itself the
         # bottleneck); `mutate` sees the copy index as column `copy_i`
         base = spark.read.parquet(f"{SRC}/{name}.parquet")
-        copies = F.broadcast(
-            spark.range(k).select(F.col("id").cast("int").alias("copy_i"))
-        )
+        copies = F.broadcast(spark.range(k).select(F.col("id").cast("int").alias("copy_i")))
         out = mutate(base.crossJoin(copies)).drop("copy_i")
         out.write.mode("overwrite").parquet(f"{DST}/{name}.parquet")
 
@@ -126,45 +127,37 @@ def build(spark, k: int) -> None:
     )
 
 
+def stamp(k: int) -> str:
+    """What a build is made of: K and each source file's size and mtime."""
+    stats = {n: os.stat(os.path.join(SRC, n)) for n in sorted(os.listdir(SRC))}
+    src = [[n, st.st_size, st.st_mtime_ns] for n, st in stats.items()]
+    return json.dumps({"k": k, "src": src})
+
+
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     probes = sys.argv[2:] or PROBES
     registry.load_all()
-    spark = get_spark(app_name="kawa_scale_probe")
+    spark = get_spark("kawa_scale_probe", extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
 
-    # SCALE_PROBE_SKIP_BUILD=1 reuses an existing build (e.g. to probe
-    # heavy queries in separate JVMs so one query's OOM can't poison
-    # the rest of the sweep — learned from the r8 100× run, where
-    # dedup_clusters killed the context and five queries reported ERR
-    # on the dead session)
-    if os.environ.get("SCALE_PROBE_SKIP_BUILD") and os.path.isdir(DST):
-        print(f"reusing existing build at {DST}", flush=True)
+    if os.path.exists(STAMP) and pathlib.Path(STAMP).read_text() == stamp(k):
+        print(f"reusing the {k}x build at {DST}", flush=True)
     else:
         print(f"building {k}x synthetic scale-up under {DST} ...", flush=True)
         t0 = time.perf_counter()
         build(spark, k)
+        pathlib.Path(STAMP).write_text(stamp(k))
         print(f"built in {time.perf_counter() - t0:.1f}s", flush=True)
-
-    def best_of(fn, sf_dir, reps=2):
-        best = None
-        for _ in range(reps):
-            t = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t
-            best = dt if best is None else min(best, dt)
-        return best
 
     print(f"{'query':34s} {'sf0.1':>8s} {f'{k}x':>8s} {'ratio':>6s}")
     for key in probes:
         fn = registry.QUERIES[key]
+        variants = {"sf0.1": query(spark, fn, SRC), f"{k}x": query(spark, fn, DST)}
         try:
-            t1 = best_of(fn, SRC)
-            t2 = best_of(fn, DST)
-            print(
-                f"{key:34s} {t1:8.2f} {t2:8.2f} {t2 / t1:6.1f}x", flush=True
-            )
+            runs = measure(spark, variants, REPS, fingerprint=lambda s, df: None)
+            t1, t2 = (min(r["wall_s"] for r in rs) for rs in runs.values())
+            print(f"{key:34s} {t1:8.2f} {t2:8.2f} {t2 / t1:6.1f}x", flush=True)
         except Exception as e:  # noqa: BLE001
             print(f"{key:34s} ERR {str(e)[:80]}", flush=True)
 

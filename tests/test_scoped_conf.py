@@ -15,11 +15,18 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
+from kawa_spark.io import stream_table, table
 from kawa_spark.queries.streaming_mode import _drain
-from kawa_spark.session import FS_CHECKPOINT_MANAGER, checkpoint_conf, scoped_conf
+from kawa_spark.session import (
+    FS_CHECKPOINT_MANAGER,
+    _default_driver_memory,
+    checkpoint_conf,
+    scoped_conf,
+)
 from kawa_spark.sinks import RoutingSink
 
 PARTS = "spark.sql.shuffle.partitions"
+NANOS = "spark.sql.legacy.parquet.nanosAsLong"
 MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 PKG = pathlib.Path(__file__).resolve().parent.parent / "kawa_spark"
 
@@ -122,8 +129,7 @@ def test_scoped_conf_serializes_threads(spark):
 
 
 def test_no_session_conf_swaps_outside_session_module():
-    """Session-global conf changes go through session.scoped_conf; the
-    one other allowed write is io.py's nanosAsLong legacy flag."""
+    """Session-global conf changes go through session.scoped_conf."""
     swap = re.compile(r"(?<![\w])conf\.(?:set|unset)\(")
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
@@ -133,10 +139,31 @@ def test_no_session_conf_swaps_outside_session_module():
         for no, line in enumerate(path.read_text().splitlines(), 1):
             if not swap.search(line):
                 continue
-            if rel == "io.py" and "nanosAsLong" in line:
-                continue
             offenders.append(f"{rel}:{no}: {line.strip()}")
     assert not offenders, offenders
+
+
+@pytest.mark.parametrize("read", [table, stream_table])
+def test_events_read_leaves_nanos_as_long_alone(spark, sf_dir, read):
+    """Reading events writes no session conf: a session's nanosAsLong
+    keeps the value it had before the read."""
+    with scoped_conf(spark, {NANOS: "false"}):
+        assert read(spark, sf_dir, "events").schema["ts"].dataType.typeName() == "timestamp"
+        assert spark.conf.get(NANOS) == "false"
+
+
+@pytest.mark.parametrize(
+    "mem_total_kib, want",
+    [(16479424, "7g"), (64 << 20, "16g"), (40 << 20, "16g"), (3 << 20, "1g"), (512 << 10, "1g")],
+)
+def test_default_driver_memory_is_half_the_host(tmp_path, mem_total_kib, want):
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text(f"MemFree:  1024 kB\nMemTotal:  {mem_total_kib} kB\n")
+    assert _default_driver_memory(str(meminfo)) == want
+
+
+def test_default_driver_memory_without_meminfo(tmp_path):
+    assert _default_driver_memory(str(tmp_path / "missing")) == "16g"
 
 
 class _StatePartitions(StreamingQueryListener):

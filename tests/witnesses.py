@@ -8,12 +8,12 @@ benched. The production modules keep only the registered forms.
 * ``_similarity_topk_catalyst`` — the pre-r14 similarity_topk body
   (tests/test_pq_adc.py).
 * ``_multiprobe_catalyst`` — the pre-r16 similarity_lsh_multiprobe body
-  (tests/test_multiprobe_vectorized.py, scripts/probe_multiprobe_ab.py).
+  (tests/test_multiprobe_vectorized.py, ``scripts/ab.py multiprobe``).
 * ``_assign_cells_structmin`` / ``_lloyd_assign_structmin`` — the pre-r15
   struct-min nearest-centroid assignments (tests/test_argmin_vectorized.py).
 * ``_simhash_bitsums_occ`` / ``_simhash_bitsums_dict`` — the r15
   per-occurrence bitsum stage and the Arrow dictionary challenger
-  (tests/test_simhash_dict.py, scripts/probe_simhash_ab.py).
+  (tests/test_simhash_dict.py, ``scripts/ab.py simhash``).
 """
 
 from __future__ import annotations
