@@ -14,6 +14,16 @@ The defaults here are the ones that matter at 100 TB:
 * Arrow enabled so any pandas UDF / toPandas path is vectorized.
 * UTC session timezone so timestamp semantics are engine-independent
   (parquet naive timestamps == oracle's naive timestamps).
+* Python workers fork from ``kawa_spark.pyworker``
+  (``spark.python.daemon.module``), pyspark's daemon with a stat-guarded
+  zip-directory cache: before CPython 3.12 every Python task otherwise
+  re-reads the directories of Spark's jars and pyspark.zip, ~200 ms of
+  CPU per task (docs/SCALE.md, "Per-task Python worker set-up"). The
+  daemon starts as ``python -m`` in the JVM's working directory, so
+  ``get_spark`` puts this package's parent on the workers'
+  ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``, ahead of any value
+  the caller gives). ``extra_conf`` can override the module like any
+  other conf.
 """
 
 from __future__ import annotations
@@ -171,7 +181,11 @@ DEFAULT_CONF: dict[str, str] = {
         os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
     ),
     "spark.driver.maxResultSize": "4g",
+    "spark.python.daemon.module": "kawa_spark.pyworker",
 }
+
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_master() -> str:
@@ -193,6 +207,9 @@ def get_spark(
     )
     if extra_conf:
         conf.update(extra_conf)
+    # the worker daemon imports kawa_spark whatever the JVM's cwd is
+    paths = [_PACKAGE_PARENT, *conf.get(_WORKER_PATH, "").split(os.pathsep)]
+    conf[_WORKER_PATH] = os.pathsep.join(p for p in dict.fromkeys(paths) if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

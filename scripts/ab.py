@@ -222,11 +222,6 @@ def main() -> None:
     ap.add_argument("--jfr", action="store_true")
     a = ap.parse_args()
 
-    # a Python streaming source runs in its own process, which finds
-    # kawa_spark only through PYTHONPATH (set before the JVM starts)
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
-    )
     spec = importlib.import_module(f"ab_specs.{a.spec}")
     extra = {"spark.ui.showConsoleProgress": "false"}
     if a.jfr:

@@ -9,7 +9,8 @@ import inspect
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from kawa_spark import registry
 
@@ -38,15 +39,11 @@ def main() -> None:
     ]
     for key, fn in registry.QUERIES.items():
         src = inspect.getsourcefile(fn) or "?"
-        rel = os.path.relpath(src, "/root/repo")
+        rel = os.path.relpath(src, ROOT)
         line = inspect.getsourcelines(fn)[1]
         syn = first_sentence(fn.__doc__).replace("|", "\\|")
         lines.append(f"| `{key}` | {rel}:{line} | {syn} |")
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "docs",
-        "REGISTRY.md",
-    )
+    out = os.path.join(ROOT, "docs", "REGISTRY.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {out}: {len(registry.QUERIES)} keys")

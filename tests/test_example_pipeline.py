@@ -4,9 +4,11 @@ enrich → route → archive, with offset resume."""
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/examples")
+EXAMPLES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "examples")
+sys.path.insert(0, EXAMPLES)
 
 from log_pipeline import start_pipeline  # noqa: E402
 
@@ -75,7 +77,7 @@ def test_training_data_pipeline_composes(spark, tmp_path):
     properly-filtered training set."""
     import sys
 
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, EXAMPLES)
     from training_data_pipeline import build_training_set
 
     sf = "/root/testdata/sf0.001"
@@ -218,7 +220,7 @@ def test_daily_update_gates_compose(spark):
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, EXAMPLES)
     from training_data_pipeline import daily_update
 
     from kawa_spark.queries.llm_dedup import (

@@ -11,7 +11,11 @@ state, opaque-binary kernels).
 
 from __future__ import annotations
 
+import os
+
 from kawa_spark import registry
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 registry.load_all()
 
@@ -48,7 +52,7 @@ def test_window_covers_unseen_and_driver_red_keys():
     import json
 
     latest: dict[str, tuple[int, bool]] = {}
-    for p in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for p in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = int(p.rsplit("_r", 1)[1].split(".")[0])
         with open(p) as f:
             for k, v in json.load(f).items():
@@ -86,7 +90,7 @@ def test_deferred_is_exactly_the_oldest_offwindow_tier():
     import json
 
     latest: dict[str, int] = {}
-    for p in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for p in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = int(p.rsplit("_r", 1)[1].split(".")[0])
         with open(p) as f:
             for k in json.load(f):

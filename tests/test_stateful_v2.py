@@ -8,6 +8,8 @@ so the arithmetic stays pinned even where the runtime can't start.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -140,7 +142,7 @@ def test_v2_env_gate_is_documented():
     to carry the gate (and this test fails if protobuf appears in the
     container, at which point the e2e test runs and the gate note
     should be retired)."""
-    with open("/root/repo/docs/COVERAGE.md") as f:
+    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs", "COVERAGE.md")) as f:
         cov = f.read()
     if HAVE_PROTOBUF:
         pytest.fail(
